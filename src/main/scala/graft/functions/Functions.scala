@@ -510,8 +510,6 @@ object functions {
     urlParts(url).getItem(i)
   }
 
-  def l2Norm(a: Column): Column = sf.sqrt(dot(a, a))
-
   /** Cosine similarity; inputs cast to array<double> so Spark and any
     * double-precision oracle agree bit-for-bit on the products. A native
     * Catalyst expression (graft.plans.CosineSimilarity): doGenCode

@@ -6,11 +6,9 @@ import graft.{functions => gf}
 
 /** Row/column cleaning operators (reference fact_I94 + dims prep:
   * etl.py:139-186, 188-256, 565-585). All operate on the logical plan —
-  * drops prune at the scan, filters push down.
+  * null drops and filters push down to the scan.
   */
 object Cleaning {
-
-  def dropCols(df: DataFrame, cols: String*): DataFrame = df.drop(cols: _*)
 
   /** Drop rows with a null in any of `subset` (all columns if empty). */
   def dropNullsAny(df: DataFrame, subset: String*): DataFrame =
@@ -44,8 +42,6 @@ object Cleaning {
       casts.collectFirst { case (`c`, t) => sf.col(c).cast(t).as(c) }
         .getOrElse(sf.col(c))
     }.toIndexedSeq: _*)
-
-  def filterRows(df: DataFrame, cond: Column): DataFrame = df.filter(cond)
 
   /** PII patterns for `scrubPii` — RE2-compatible (no backreferences),
     * so the same literals run in Java regex and in SQL engines. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
 
@@ -284,49 +284,10 @@ object Graph {
     * anywhere, nothing to round.
     */
   def pageRank(df: DataFrame, basketCol: String, itemCol: String,
-               minPairCount: Long = 2, iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000000000L // 1e12
-    val edges = minedEdges(df, basketCol, itemCol, minPairCount)
-    val outdeg = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("outdeg"))
-    // materialize the loop invariants ONCE: without this, every
-    // iteration's lineage re-derives the whole pair-mining funnel
-    // (and the final collect re-runs it `iters` more times)
-    val edgesDeg = coPartitionLoopEdges(edges.join(outdeg, "src"))
-    // derive nodes from the CACHED frame (coPartitionLoopEdges
-    // persisted + materialized it, so the mining funnel ran exactly once)
-    val nodes = edgesDeg.select(sf.col("src").as("item")).distinct()
-    // n is a plan-time scalar: the node count is the one driver-side
-    // value the integer recurrence needs (same role as a literal seed).
-    val n = nodes.count()
-    require(n > 0, "pageRank: graph is empty at this minPairCount")
-    val base = (15L * SCALE) / (100L * n)
-    var ranks = nodes.select(sf.col("item"), sf.lit(SCALE / n).as("rank_fx"))
-    for (_ <- 1 to iters) {
-      // [[minedEdges]] emits BOTH directions of every pair, so every
-      // node has in-edges and ranks_k covers every node (induction
-      // from the all-node seed) — the aggregated contribution table IS
-      // the next rank table. The former `nodes LEFT JOIN contrib`
-      // merge (an Exchange + Sort + SortMergeJoin of the node table
-      // per round) only existed to re-attach isolated nodes, which a
-      // symmetric mined edge list cannot have.
-      ranks = edgesDeg
-        .join(ranks, sf.col("src") === sf.col("item"))
-        .select(sf.col("dst"),
-          sf.expr("rank_fx div outdeg").as("c"))
-        .groupBy("dst").agg(sf.sum(sf.col("c")).as("s"))
-        .select(sf.col("dst").as("item"),
-          (sf.lit(base) + sf.expr("(85 * s) div 100")).as("rank_fx"))
-    }
-    // end-of-loop release (the eigenvector/katz discipline):
-    // materialize the node-sized result UNSORTED (the global sort runs
-    // once, in the consumer's action, not again inside the checkpoint),
-    // then free the |E|-sized loop invariant — library callers no
-    // longer leak a cached edge frame until an external clearCache.
-    val fx = ranks.localCheckpoint(true)
-    edgesDeg.unpersist()
-    fx.orderBy(sf.col("rank_fx").desc, sf.col("item"))
-  }
+               minPairCount: Long = 2, iters: Int = 3): DataFrame =
+    rankLoop(minedEdges(df, basketCol, itemCol, minPairCount), _ => sf.lit(true),
+      iters, weighted = false, symmetric = true,
+      "pageRank: graph is empty at this minPairCount")
 
   /** Node-count cap under which the per-round rank/score frame of an
     * iterative graph loop is small enough to broadcast — below it the
@@ -343,40 +304,130 @@ object Graph {
     spark.conf.getOption("spark.graft.loop.broadcastNodeCap")
       .map(_.toLong).getOrElse(4000000L)
 
-  /** Persist a loop-invariant edge table, repartitioned+sorted on the
-    * per-round join key iff the graph is too big for the per-round
-    * rank frame to broadcast (see [[broadcastNodeCap]]). The up-front
-    * exchange is paid once; every round's sort-merge join then reuses
-    * the cached partitioning AND sort order instead of re-shuffling +
-    * re-sorting |E| rows per round. Returns a PERSISTED frame either
-    * way (callers must not re-persist); a caller-persisted input keeps
-    * its cache and only the repartitioned copy (if any) is owned here.
-    *
-    * The gate measures the MATERIALIZED edge frame (plan-stats
-    * `rowCount` is None for parquet-derived frames in every reachable
-    * configuration, so a stats gate can never fire; this one job reads
-    * the just-persisted cache the loop's first action would
-    * materialize anyway). What must broadcast per round is the
-    * NODE-sized rank/label frame, so the gate estimates the node count
-    * with approx_count_distinct over the join key (±2 % HLL — a
-    * threshold read, not a result): an edges/2 proxy measured 20×
-    * over on dense mined graphs (avg degree 40) and fired the gate an
-    * order of magnitude early, paying the extra exchange exactly where
-    * broadcasting was still the right plan. */
-  private def coPartitionLoopEdges(edges0: DataFrame,
-                                   key: String = "src"): DataFrame = {
-    val spark = edges0.sparkSession
-    val owned = !callerCached(edges0)
-    val plain = if (owned) edges0.persist() else edges0
-    val nodesEst = plain.agg(
-      sf.approx_count_distinct(sf.col(key)).as("n")).head().getLong(0)
-    if (nodesEst > broadcastNodeCap(spark)) {
-      val parted = plain.repartition(sf.col(key)).sortWithinPartitions(key)
-        .persist()
-      parted.count() // materialize from the plain cache before freeing it
-      if (owned) plain.unpersist()
-      parted
-    } else plain
+  /** How many loop rounds may accumulate persisted frames before a
+    * loop cuts lineage with an eager checkpoint and frees the
+    * superseded ones. Eager per-round counts measured 1-2s/query of
+    * pure job overhead on the bench's 3-round standalone runs, so the
+    * discipline is BATCHED: at most `UnpersistBatch` round frames are
+    * ever cached beyond the live one, and a default-round run
+    * (3 <= 5) pays zero extra jobs. */
+  private val UnpersistBatch = 5
+
+  /** True when the caller handed this loop an ALREADY-persisted frame
+    * (the mine-once `*FromEdges` pipeline idiom): its cache is the
+    * caller's to free — the loop must not unpersist it at cleanup. */
+  private def callerCached(df: DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+  /** The gate's default node figure: ±2 % HLL distinct counts of the
+    * per-round join keys, the larger one (a threshold read, not a
+    * result — an edges/2 proxy measured 20× over on dense mined graphs
+    * and fired the gate an order of magnitude early). */
+  private def nodeEstimate(keys: Seq[String]): Column =
+    keys.map(k => sf.approx_count_distinct(sf.col(k))).reduce(sf.greatest(_, _))
+
+  /** The scaffolding one iterative-operator call owns (see [[loop]]):
+    * the loop-invariant edge frame, the round frames it persists, and
+    * the lineage cut every `UnpersistBatch` rounds. */
+  private final class Loop {
+    private val owned = scala.collection.mutable.Buffer.empty[DataFrame]   // freed at the end
+    private val pending = scala.collection.mutable.Buffer.empty[DataFrame] // freed at the next cut
+    private var byKey = Map.empty[String, DataFrame]
+
+    /** Persist the edge frame (unless the caller already did) and run
+      * ONE probe aggregate over it: column 0 is the gate's node figure,
+      * the rest are the scalars the recurrence needs (n, |S|, d_max).
+      * The probe reads the just-persisted cache the first round would
+      * materialize anyway (plan-stats `rowCount` is None for
+      * parquet-derived frames, so a stats gate could never fire). Above
+      * [[broadcastNodeCap]] the edges are re-persisted
+      * hash-partitioned+sorted once per join key in `keys`, so no round
+      * re-shuffles or re-sorts |E| rows. */
+    def prepare(edges0: DataFrame, keys: String*)(
+        probe: DataFrame => DataFrame = _.agg(nodeEstimate(keys))): Row = {
+      val mine = !callerCached(edges0)
+      val plain = if (mine) own(edges0) else edges0
+      val stats = probe(plain).head()
+      byKey =
+        if (stats.getLong(0) <= broadcastNodeCap(plain.sparkSession))
+          keys.map(_ -> plain).toMap
+        else {
+          val parted = keys.map(k =>
+            k -> own(plain.repartition(sf.col(k)).sortWithinPartitions(k)))
+          parted.foreach(_._2.count()) // materialize from the plain cache before freeing it
+          if (mine) { plain.unpersist(); owned -= plain }
+          parted.toMap
+        }
+      stats
+    }
+
+    /** [[prepare]] for a loop seeded from a node frame on the src key:
+      * `derive` builds the node frame from an edge frame, and the
+      * probe — `count(1)`, the gate's node figure, then `stats` — runs
+      * over it. A `persisted` node frame (a general path's per-round
+      * merge side) is persisted inside the probe, after the edge cache
+      * exists, so the one probe job fills both caches (a cache first
+      * touched inside a round plan costs one materialization job per
+      * reference); otherwise it is re-derived from the prepared edges. */
+    def prepareNodes(edges0: DataFrame, persisted: Boolean,
+                     derive: DataFrame => DataFrame, stats: Column*): (Row, DataFrame) = {
+      val kept = if (persisted) Some(derive(edges0)) else None
+      val row = prepare(edges0, "src")(p =>
+        kept.fold(derive(p))(own).agg(sf.count(sf.lit(1)), stats: _*))
+      (row, kept.getOrElse(derive(edges("src"))))
+    }
+
+    /** The prepared edge frame for a round join on `key`. */
+    def edges(key: String): DataFrame = byKey(key)
+
+    /** Persist a frame every round reads; freed when the call ends. */
+    def own(df: DataFrame): DataFrame = { owned += df; df.persist() }
+
+    /** Persist a round frame; freed at the next lineage cut. */
+    def keep(df: DataFrame): DataFrame = { pending += df; df.persist() }
+
+    /** `rounds` synchronous steps from `init`. Every `UnpersistBatch`
+      * rounds short of the last, the state is materialized with an
+      * eager localCheckpoint — CUTTING LINEAGE: a frame read twice per
+      * round doubles the plan tree every round, and the analyzer and
+      * every AQE plan-description event walk it — and every frame
+      * `keep` persisted since is freed. */
+    def iterateAll(rounds: Int, init: Seq[DataFrame])(
+        step: Seq[DataFrame] => Seq[DataFrame]): Seq[DataFrame] =
+      (1 to rounds).foldLeft(init) { (state, r) =>
+        val next = step(state)
+        if (r % UnpersistBatch != 0 || r == rounds) next
+        else {
+          val cut = next.map(_.localCheckpoint(true))
+          pending.foreach(_.unpersist()); pending.clear()
+          cut
+        }
+      }
+
+    def iterate(rounds: Int, init: DataFrame)(step: DataFrame => DataFrame): DataFrame =
+      iterateAll(rounds, Seq(init))(s => Seq(step(s.head))).head
+
+    def release(): Unit = {
+      (pending ++ owned).foreach(_.unpersist())
+      pending.clear(); owned.clear()
+    }
+  }
+
+  /** A loop's node frame (item): the src set, or with `withDst` the
+    * union(src, dst), so a node that only receives edges of an
+    * asymmetric pre-mined list still gets a row. */
+  private def nodesOf(withDst: Boolean)(e: DataFrame): DataFrame =
+    (if (withDst) e.select(sf.col("src").as("item")).union(e.select(sf.col("dst").as("item")))
+     else e.select(sf.col("src").as("item"))).distinct()
+
+  /** Run one iterative operator: `body` builds the node-sized result,
+    * which is materialized UNSORTED with one eager checkpoint (the
+    * global sort runs once, in the consumer's action), then every frame
+    * the loop persisted is freed — on the throw path too. A
+    * caller-persisted edge frame stays cached. */
+  private def loop(body: Loop => DataFrame): DataFrame = {
+    val lp = new Loop
+    try body(lp).localCheckpoint(true) finally lp.release()
   }
 
   /** WEIGHTED PageRank — [[pageRank]] with each node's rank split
@@ -397,38 +448,13 @@ object Graph {
     * join. */
   def pageRankWeighted(df: DataFrame, basketCol: String, itemCol: String,
                        minPairCount: Long = 2, iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000000000L // 1e12
     val pairs = minedPairs(df, basketCol, itemCol, minPairCount)
     val edges = pairs.select(sf.col("item_a").as("src"),
         sf.col("item_b").as("dst"), sf.col("c_ab").as("w"))
       .union(pairs.select(sf.col("item_b").as("src"),
         sf.col("item_a").as("dst"), sf.col("c_ab").as("w")))
-    val wout = edges.groupBy("src").agg(sf.sum("w").cast("long").as("wout"))
-    val edgesW = coPartitionLoopEdges(edges.join(wout, "src"))
-    val nodes = edgesW.select(sf.col("src").as("item")).distinct()
-    val n = nodes.count()
-    require(n > 0, "pageRankWeighted: graph is empty at this minPairCount")
-    val base = (15L * SCALE) / (100L * n)
-    var ranks = nodes.select(sf.col("item"), sf.lit(SCALE / n).as("rank_fx"))
-    for (_ <- 1 to iters) {
-      // symmetric mined pairs: every node receives contributions every
-      // round (see [[pageRank]]), so the per-round node merge join is
-      // dropped — the aggregated contribution IS the next rank table
-      ranks = edgesW
-        .join(ranks, sf.col("src") === sf.col("item"))
-        .select(sf.col("dst"),
-          sf.expr("CAST((CAST(rank_fx AS DECIMAL(38,0)) * w) DIV wout AS BIGINT)")
-            .as("c"))
-        .groupBy("dst").agg(sf.sum(sf.col("c")).as("s"))
-        .select(sf.col("dst").as("item"),
-          (sf.lit(base) + sf.expr("(85 * s) div 100")).as("rank_fx"))
-    }
-    // checkpoint BEFORE the global sort (the eigen/katz discipline —
-    // the sort runs once, in the consumer's action)
-    val fx = ranks.localCheckpoint(true)
-    edgesW.unpersist()
-    fx.orderBy(sf.col("rank_fx").desc, sf.col("item"))
+    rankLoop(edges, _ => sf.lit(true), iters, weighted = true, symmetric = true,
+      "pageRankWeighted: graph is empty at this minPairCount")
   }
 
   /** Personalized PageRank: [[pageRank]] with the restart (teleport)
@@ -452,72 +478,60 @@ object Graph {
     * the one plan-time scalar. */
   def personalizedPageRank(df: DataFrame, basketCol: String, itemCol: String,
                            seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                           minPairCount: Long = 2, iters: Int = 3): DataFrame = {
-    // [[minedEdges]] emits both directions of every pair, so the
-    // symmetric loop applies (every node receives contributions every
-    // round — the per-round `nodes LEFT JOIN contrib` merge of the
-    // general [[personalizedPageRankFromEdges]] path is an identity
-    // here and is dropped; PprSymmetricSpec pins the equality).
-    require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000000000L // 1e12
-    val edges = minedEdges(df, basketCol, itemCol, minPairCount)
-    val outdeg = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("outdeg"))
-    val edgesDeg = coPartitionLoopEdges(edges.join(outdeg, "src"))
-    val nodes = edgesDeg.select(sf.col("src").as("item")).distinct()
-      .withColumn("is_seed", seedPred(sf.col("item")))
-    val nSeeds = nodes.filter(sf.col("is_seed")).count()
-    require(nSeeds > 0, "personalizedPageRank: seed set is empty on this graph")
-    val base = (15L * SCALE) / (100L * nSeeds)
-    var ranks = nodes.select(sf.col("item"),
-      sf.when(sf.col("is_seed"), sf.lit(SCALE / nSeeds)).otherwise(0L).as("rank_fx"))
-    for (_ <- 1 to iters) {
-      // seed membership is a pure expression of the node id, so it is
-      // re-derived inline on the aggregated frame instead of joined
-      ranks = edgesDeg
-        .join(ranks, sf.col("src") === sf.col("item"))
-        .select(sf.col("dst"), sf.expr("rank_fx div outdeg").as("c"))
-        .groupBy("dst").agg(sf.sum(sf.col("c")).as("s"))
-        .select(sf.col("dst").as("item"),
-          (sf.when(seedPred(sf.col("dst")), base).otherwise(0L) +
-            sf.expr("(85 * s) div 100")).as("rank_fx"))
-    }
-    // end-of-loop release (the pageRank convention): one node-sized
-    // eager checkpoint BEFORE the global sort (the sort runs once, in
-    // the consumer's action), then free the |E|-sized loop invariant.
-    val fx = ranks.select(sf.col("item"), sf.col("rank_fx"))
-      .localCheckpoint(true)
-    edgesDeg.unpersist()
-    fx.orderBy(sf.col("rank_fx").desc, sf.col("item"))
-  }
+                           minPairCount: Long = 2, iters: Int = 3): DataFrame =
+    rankLoop(minedEdges(df, basketCol, itemCol, minPairCount), seedPred, iters,
+      weighted = false, symmetric = true,
+      "personalizedPageRank: seed set is empty on this graph")
 
   /** [[personalizedPageRank]] over a pre-mined edge list. */
   def personalizedPageRankFromEdges(edges: DataFrame,
                                     seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                                    iters: Int = 3): DataFrame = {
+                                    iters: Int = 3): DataFrame =
+    rankLoop(edges, seedPred, iters, weighted = false, symmetric = false,
+      "personalizedPageRank: seed set is empty on this graph")
+
+  /** The exact fixed-point recurrence behind the PageRank family:
+    * [[pageRank]] is the all-seed case (|S| = n), `weighted` edges
+    * carry `w` and split rank in proportion to it — (rank·w) div W_u
+    * in DECIMAL(38,0), since rank·w can exceed int64 — instead of
+    * rank div outdeg. Ranks are re-derived from the aggregated
+    * contributions; seed membership is a pure expression of the node
+    * id, so it is evaluated inline, never joined. `symmetric` edge
+    * lists (both directions of every mined pair) give every node
+    * in-edges every round, so the per-round `nodes LEFT JOIN contrib`
+    * merge a general pre-mined list needs (nodes without in-edges keep
+    * their base term) is dropped — PprSymmetricSpec pins the two paths
+    * equal. The probe job counts |S| over the node frame. */
+  private def rankLoop(edges: DataFrame, seedPred: Column => Column, iters: Int,
+                       weighted: Boolean, symmetric: Boolean, empty: String): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val SCALE = 1000000000000L // 1e12
-    val outdeg = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(outdeg, "src").persist()
-    val nodes = edgesDeg.select(sf.col("src").as("item")).distinct()
-      .withColumn("is_seed", seedPred(sf.col("item"))).persist()
-    val nSeeds = nodes.filter(sf.col("is_seed")).count()
-    require(nSeeds > 0, "personalizedPageRank: seed set is empty on this graph")
-    val base = (15L * SCALE) / (100L * nSeeds)
-    var ranks = nodes.select(sf.col("item"),
-      sf.when(sf.col("is_seed"), sf.lit(SCALE / nSeeds)).otherwise(0L).as("rank_fx"))
-    for (_ <- 1 to iters) {
-      val contrib = edgesDeg
-        .join(ranks, sf.col("src") === sf.col("item"))
-        .select(sf.col("dst"), sf.expr("rank_fx div outdeg").as("c"))
-        .groupBy("dst").agg(sf.sum(sf.col("c")).as("s"))
-      ranks = nodes
-        .join(contrib, sf.col("item") === sf.col("dst"), "left")
-        .select(sf.col("item"), sf.col("is_seed"),
-          (sf.when(sf.col("is_seed"), base).otherwise(0L) +
-            sf.expr("(85 * coalesce(s, 0L)) div 100")).as("rank_fx"))
-    }
-    ranks.select(sf.col("item"), sf.col("rank_fx"))
-      .orderBy(sf.col("rank_fx").desc, sf.col("item"))
+    val (out, split) =
+      if (weighted) (sf.sum("w").cast("long"),
+        "CAST((CAST(rank_fx AS DECIMAL(38,0)) * w) DIV out AS BIGINT)")
+      else (sf.count(sf.lit(1)), "rank_fx div out")
+    val seed = seedPred(sf.col("item"))
+    loop { lp =>
+      val (stats, nodes) = lp.prepareNodes(
+        edges.join(edges.groupBy("src").agg(out.as("out")), "src"), !symmetric,
+        nodesOf(withDst = false), sf.count(sf.when(seed, 1)))
+      val nSeeds = stats.getLong(1)
+      require(nSeeds > 0, empty)
+      val e = lp.edges("src")
+      val base = (15L * SCALE) / (100L * nSeeds)
+      val ranks0 = nodes.select(sf.col("item"),
+        sf.when(seed, SCALE / nSeeds).otherwise(0L).as("rank_fx"))
+      lp.iterate(iters, ranks0) { ranks =>
+        val contrib = e.join(ranks, sf.col("src") === sf.col("item"))
+          .select(sf.col("dst"), sf.expr(split).as("c"))
+          .groupBy("dst").agg(sf.sum(sf.col("c")).as("s"))
+        val merged =
+          if (symmetric) contrib.select(sf.col("dst").as("item"), sf.col("s"))
+          else nodes.join(contrib, sf.col("item") === sf.col("dst"), "left")
+        merged.select(sf.col("item"), (sf.when(seed, base).otherwise(0L) +
+          sf.expr("(85 * coalesce(s, 0L)) div 100")).as("rank_fx"))
+      }
+    }.orderBy(sf.col("rank_fx").desc, sf.col("item"))
   }
 
   /** Multi-source BFS hop distance, bounded rounds: dist(v) = length
@@ -587,85 +601,36 @@ object Graph {
                        rounds: Int = 3): DataFrame =
     relaxRounds(edges0, seedPred, rounds, weighted = false)
 
-  /** How many loop rounds may accumulate persisted frames before the
-    * iterative operators force materialization and free the
-    * superseded ones. Eager per-round counts measured 1-2s/query of
-    * pure job overhead on the bench's 3-round standalone runs, so the
-    * discipline is BATCHED: at most `UnpersistBatch` node-table-sized
-    * loop frames are ever cached beyond the live one, and a
-    * default-round run (3 <= 5) pays zero extra jobs. */
-  private val UnpersistBatch = 5
-
   /** The shared synchronous relaxation loop behind [[bfsHopsFromEdges]]
-    * (step cost 1) and [[ssspFromEdges]] (step cost `w`). Memory AND
-    * PLAN discipline: the previous frame is read TWICE per round
-    * (relax + merge), so the logical lineage DOUBLES every round —
-    * persist dedups execution but not the plan tree, and a 12-round
-    * plan is 2¹² subplan copies: the analyzer, canonicalization, and
-    * every AQE plan-description event walk it (observed minutes of
-    * driver CPU in `generateTreeString` alone). So every
-    * `UnpersistBatch` rounds the loop CUTS LINEAGE with an eager
-    * localCheckpoint (one materializing job — the same job the old
-    * batched count paid) and unpersists every superseded round frame,
-    * including the just-superseded live one: driver planning cost per
-    * round is bounded by the batch width (≤ 2⁵ subplans), cached
-    * frames by `UnpersistBatch` + checkpoints, regardless of the
-    * round budget, and short default-round runs pay ZERO extra jobs.
-    * Nodes seed from union(src, dst), so dst-only nodes of an
-    * asymmetric pre-mined edge list still get an output row. */
-  /** True when the caller handed this loop an ALREADY-persisted frame
-    * (the mine-once `*FromEdges` pipeline idiom): its cache is the
-    * caller's to free — the loop must not unpersist it at cleanup. */
-  private def callerCached(df: DataFrame): Boolean =
-    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
+    * (step cost 1) and [[ssspFromEdges]] (step cost `w`). The previous
+    * distances are read twice per round (relax + merge), so each
+    * round's frame is persisted and the [[Loop]] lineage cut bounds
+    * the plan tree at any round budget. Nodes seed from
+    * union(src, dst), so dst-only nodes of an asymmetric pre-mined
+    * edge list still get an output row. */
   private def relaxRounds(edges0: DataFrame,
                           seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                           rounds: Int, weighted: Boolean): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1, 20], got $rounds")
-    val ownsEdges = !callerCached(edges0)
-    // loop invariant: above the broadcast cap, persist it already
-    // partitioned+sorted on the per-round join key so no round
-    // re-shuffles |E| rows (no-op on broadcastable graphs)
-    val edges = if (ownsEdges) coPartitionLoopEdges(edges0) else edges0
     val step = if (weighted) sf.col("w") else sf.lit(1L)
-    var dist = edges.select(sf.col("src").as("item"))
-      .union(edges.select(sf.col("dst").as("item"))).distinct()
-      .select(sf.col("item"),
-        sf.when(seedPred(sf.col("item")), 0L).cast("long").as("dist"))
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val prev = dist
-      val relax = edges.join(prev, sf.col("src") === sf.col("item"))
-        .filter(sf.col("dist").isNotNull)
-        .select(sf.col("dst"), (sf.col("dist") + step).as("nd"))
-        .groupBy("dst").agg(sf.min("nd").as("nd"))
-      // previous distances are read twice per round (relax + merge)
-      dist = prev.join(relax, sf.col("item") === sf.col("dst"), "left")
+    loop { lp =>
+      lp.prepare(edges0, "src")()
+      val edges = lp.edges("src")
+      val dist0 = nodesOf(withDst = true)(edges)
         .select(sf.col("item"),
-          sf.when(sf.col("dist").isNull, sf.col("nd"))
-            .when(sf.col("nd").isNull, sf.col("dist"))
-            .otherwise(sf.least(sf.col("dist"), sf.col("nd"))).as("dist"))
-        .persist()
-      if (r > 1) toFree += prev // round 1's prev (the seed) is unpersisted
-      if (r % UnpersistBatch == 0 && r < rounds) {
-        val ck = dist.localCheckpoint(true) // materialize + CUT LINEAGE
-        toFree += dist
-        toFree.foreach(_.unpersist())
-        toFree.clear()
-        dist = ck
+          sf.when(seedPred(sf.col("item")), 0L).cast("long").as("dist"))
+      lp.iterate(rounds, dist0) { prev =>
+        val relax = edges.join(prev, sf.col("src") === sf.col("item"))
+          .filter(sf.col("dist").isNotNull)
+          .select(sf.col("dst"), (sf.col("dist") + step).as("nd"))
+          .groupBy("dst").agg(sf.min("nd").as("nd"))
+        lp.keep(prev.join(relax, sf.col("item") === sf.col("dst"), "left")
+          .select(sf.col("item"),
+            sf.when(sf.col("dist").isNull, sf.col("nd"))
+              .when(sf.col("nd").isNull, sf.col("dist"))
+              .otherwise(sf.least(sf.col("dist"), sf.col("nd"))).as("dist")))
       }
-    }
-    // end-of-loop release: the final batch's in-loop cut is skipped by
-    // design (r < rounds), so materialize the node-sized result with
-    // ONE eager checkpoint and free every loop-owned cached frame —
-    // library callers get a clean cache without a harness clearCache.
-    val out = dist.localCheckpoint(true)
-    toFree += dist
-    if (ownsEdges) toFree += edges
-    toFree.foreach(_.unpersist())
-    toFree.clear()
-    out.orderBy("item")
+    }.orderBy("item")
   }
 
   /** Community detection by synchronous label propagation (LPA,
@@ -694,24 +659,27 @@ object Graph {
 
   /** [[labelPropagation]] over a pre-mined directed edge list (both
     * directions per undirected pair, e.g. a persisted [[minedEdges]]). */
-  def labelPropagationFromEdges(edges0: DataFrame, rounds: Int = 3): DataFrame = {
+  def labelPropagationFromEdges(edges0: DataFrame, rounds: Int = 3): DataFrame =
+    propagateLabels(edges0, rounds).orderBy("item")
+
+  /** The LPA loop: (item, community), materialized and unsorted. */
+  private def propagateLabels(edges0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1, 20], got $rounds")
-    // per-round join key is dst (labels attach to the destination);
-    // above the broadcast cap persist pre-partitioned on it
-    val edges = coPartitionLoopEdges(edges0, "dst")
-    var labels = edges.select(sf.col("src").as("item")).distinct()
-      .select(sf.col("item"), sf.col("item").as("lbl"))
-    for (_ <- 1 to rounds) {
-      val votes = edges
-        .join(labels.select(sf.col("item").as("dst"), sf.col("lbl")), "dst")
-        .groupBy("src", "lbl").agg(sf.count(sf.lit(1)).as("c"))
-      labels = votes
-        .groupBy("src")
-        .agg(sf.max(sf.struct(sf.col("c"), (-sf.col("lbl")).as("nl"))).as("m"))
-        .select(sf.col("src").as("item"), (-sf.col("m.nl")).as("lbl"))
+    loop { lp =>
+      // per-round join key is dst (labels attach to the destination)
+      lp.prepare(edges0, "dst")()
+      val edges = lp.edges("dst")
+      val labels0 = nodesOf(withDst = false)(edges)
+        .select(sf.col("item"), sf.col("item").as("lbl"))
+      lp.iterate(rounds, labels0) { labels =>
+        edges
+          .join(labels.select(sf.col("item").as("dst"), sf.col("lbl")), "dst")
+          .groupBy("src", "lbl").agg(sf.count(sf.lit(1)).as("c"))
+          .groupBy("src")
+          .agg(sf.max(sf.struct(sf.col("c"), (-sf.col("lbl")).as("nl"))).as("m"))
+          .select(sf.col("src").as("item"), (-sf.col("m.nl")).as("lbl"))
+      }.select(sf.col("item"), sf.col("lbl").as("community"))
     }
-    labels.select(sf.col("item"), sf.col("lbl").as("community"))
-      .orderBy("item")
   }
 
   /** Community-quality datasheet over a community labeling (by default
@@ -739,10 +707,21 @@ object Graph {
     * broadcast cross joins. No windows, no cartesian products, no
     * driver materialization. */
   def communityQuality(df: DataFrame, basketCol: String, itemCol: String,
-                       minPairCount: Long = 2, rounds: Int = 3): DataFrame = {
-    val edges = minedEdges(df, basketCol, itemCol, minPairCount).persist()
-    communityQualityFromEdges(edges, labelPropagationFromEdges(edges, rounds))
-  }
+                       minPairCount: Long = 2, rounds: Int = 3): DataFrame =
+    withCached(minedEdges(df, basketCol, itemCol, minPairCount)) { edges =>
+      quality(edges, propagateLabels(edges, rounds))
+    }
+
+  /** `f` over `df` persisted, for readouts that scan their input more
+    * than once: a caller-persisted frame is used as is (its cache is
+    * the caller's) and the result stays lazy; otherwise the result is
+    * materialized with one eager checkpoint and the cache freed. */
+  private def withCached(df: DataFrame)(f: DataFrame => DataFrame): DataFrame =
+    if (callerCached(df)) f(df)
+    else {
+      val cached = df.persist()
+      try f(cached).localCheckpoint(true) finally cached.unpersist()
+    }
 
   /** Cluster↔label agreement: homogeneity, completeness, V-measure
     * (Rosenberg & Hirschberg 2007) between any (item, community)
@@ -960,15 +939,18 @@ object Graph {
   /** [[communityQuality]] over a pre-mined edge list and any (item,
     * community) labeling (LPA, connected components, an external
     * partition — the metric is labeling-agnostic). */
-  def communityQualityFromEdges(edges0: DataFrame, labels0: DataFrame): DataFrame = {
-    val edges = edges0.persist()
-    // the labeling feeds THREE consumers below (the per-community
-    // degree rollup and both sides of the intra-edge join); without a
-    // cut, each consumer re-executes the full labeling plan — for an
-    // LPA input that is 3x the whole propagation loop. One eager
-    // node-sized checkpoint runs it exactly once.
-    val labels = labels0.select(sf.col("item"), sf.col("community").as("lbl"))
-      .localCheckpoint(true)
+  def communityQualityFromEdges(edges0: DataFrame, labels0: DataFrame): DataFrame =
+    // the labeling feeds THREE consumers (the per-community degree
+    // rollup and both sides of the intra-edge join); without a cut, each
+    // consumer re-executes the full labeling plan — for an LPA input
+    // that is 3x the whole propagation loop. One eager node-sized
+    // checkpoint runs it exactly once.
+    withCached(edges0)(quality(_, labels0.select("item", "community").localCheckpoint(true)))
+
+  /** The [[communityQuality]] readout over persisted edges and a
+    * materialized (item, community) labeling. */
+  private def quality(edges: DataFrame, labeling: DataFrame): DataFrame = {
+    val labels = labeling.select(sf.col("item"), sf.col("community").as("lbl"))
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val deg = edges.groupBy(sf.col("src").as("item"))
       .agg(sf.count(sf.lit(1)).as("dg"))
@@ -1034,49 +1016,21 @@ object Graph {
   def kCoreFromEdges(edges0: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1, 20], got $rounds")
-    val ownsEdges = !callerCached(edges0)
-    // round-1 loop invariant: above the broadcast cap, persist already
-    // partitioned+sorted on src — the first peel's degree count and
-    // src-side semi join (over the UNSHRUNK edge list, the round that
-    // dominates the peel) then reuse the cached partitioning
-    val edgesIn = if (ownsEdges) coPartitionLoopEdges(edges0) else edges0
-    var edges = edgesIn
-    // the edge frame is read THREE times per peel (degree count + two
-    // semi joins), so lineage TRIPLES per round — every UnpersistBatch
-    // peels the loop cuts lineage with an eager localCheckpoint (one
-    // materializing job, the relaxRounds discipline) and frees all
-    // superseded peel frames — never the CALLER's edges0 (a shared
-    // mined-once invariant).
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val prev = edges
-      val keep = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("deg"))
-        .filter(sf.col("deg") >= k).select("src")
-      edges = edges
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(sf.col("src").as("dst")), Seq("dst"), "left_semi")
-        .persist()
-      if (r > 1) toFree += prev
-      if (r % UnpersistBatch == 0 && r < rounds) {
-        val ck = edges.localCheckpoint(true)
-        toFree += edges
-        toFree.foreach(_.unpersist())
-        toFree.clear()
-        edges = ck
-      }
-    }
-    // end-of-loop release: materialize the NODE-sized degree result
-    // (never the edge frame) with one eager checkpoint, then free the
-    // surviving peel frames and — if this loop persisted it — the
-    // initial edge invariant; a caller-persisted edges0 stays cached.
-    val result = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("degree"))
-      .select(sf.col("src").as("item"), sf.col("degree"))
-      .localCheckpoint(true)
-    toFree += edges
-    if (ownsEdges) toFree += edgesIn
-    toFree.foreach(_.unpersist())
-    toFree.clear()
-    result.orderBy("item")
+    loop { lp =>
+      // the first peel's degree count and src-side semi join run over
+      // the UNSHRUNK edge list — the round the gate's src partitioning
+      // serves. The peel frame is read three times per round (degree
+      // count + two semi joins), so each round's frame is persisted.
+      lp.prepare(edges0, "src")()
+      lp.iterate(rounds, lp.edges("src")) { edges =>
+        val alive = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("deg"))
+          .filter(sf.col("deg") >= k).select("src")
+        lp.keep(edges
+          .join(alive, Seq("src"), "left_semi")
+          .join(alive.select(sf.col("src").as("dst")), Seq("dst"), "left_semi"))
+      }.groupBy("src").agg(sf.count(sf.lit(1)).as("degree"))
+        .select(sf.col("src").as("item"), sf.col("degree"))
+    }.orderBy("item")
   }
 
   /** Triangle enumeration over the undirected co-occurrence graph —
@@ -1571,37 +1525,28 @@ object Graph {
     * input is left cached (the `*FromEdges` ownership convention); an
     * unpersisted one is persisted here because the closure reads it
     * three times (degrees, orientation, closing list). */
-  def localClusteringFromPairs(pairs0: DataFrame): DataFrame = {
-    val ownsPairs = !callerCached(pairs0)
-    val pairsIn = if (ownsPairs) pairs0.persist() else pairs0
-    val und = pairsIn
-      .select(sf.col("item_a").as("u"), sf.col("item_b").as("v"))
-    // degree table feeds the final readout AND the closure's
-    // orientation joins — derive it once, eagerly (node-sized)
-    val deg = und.select(sf.col("u").as("item")).union(und.select(sf.col("v").as("item")))
-      .groupBy("item").agg(sf.count(sf.lit(1)).as("degree"))
-      .localCheckpoint(true)
-    val triAt = triangleClosure(und,
-        Some(deg.select(sf.col("item").as("n"), sf.col("degree").as("d"))))
-      .select(sf.explode(sf.array(
-        sf.col("item_a"), sf.col("item_b"), sf.col("item_c"))).as("item"))
-      .groupBy("item").agg(sf.count(sf.lit(1)).as("n_triangles"))
-    val result = deg.join(triAt, Seq("item"), "left")
-      .select(sf.col("item"), sf.col("degree"),
-        sf.coalesce(sf.col("n_triangles"), sf.lit(0L)).as("n_triangles"),
-        sf.when(sf.col("degree") >= 2, gf.roundAt(
-          sf.coalesce(sf.col("n_triangles"), sf.lit(0L)).cast("double") /
-            ((sf.col("degree") * (sf.col("degree") - 1)).cast("double") / 2), 6))
-          .as("local_cc"))
-    if (ownsPairs) {
-      // release the pair invariant once the node-sized result is
-      // materialized (one eager checkpoint — the loop-family cleanup
-      // discipline); a caller-persisted input stays cached
-      val out = result.localCheckpoint(true)
-      pairsIn.unpersist()
-      out.orderBy("item")
-    } else result.orderBy("item")
-  }
+  def localClusteringFromPairs(pairs0: DataFrame): DataFrame =
+    withCached(pairs0) { pairsIn =>
+      val und = pairsIn
+        .select(sf.col("item_a").as("u"), sf.col("item_b").as("v"))
+      // degree table feeds the final readout AND the closure's
+      // orientation joins — derive it once, eagerly (node-sized)
+      val deg = und.select(sf.col("u").as("item")).union(und.select(sf.col("v").as("item")))
+        .groupBy("item").agg(sf.count(sf.lit(1)).as("degree"))
+        .localCheckpoint(true)
+      val triAt = triangleClosure(und,
+          Some(deg.select(sf.col("item").as("n"), sf.col("degree").as("d"))))
+        .select(sf.explode(sf.array(
+          sf.col("item_a"), sf.col("item_b"), sf.col("item_c"))).as("item"))
+        .groupBy("item").agg(sf.count(sf.lit(1)).as("n_triangles"))
+      deg.join(triAt, Seq("item"), "left")
+        .select(sf.col("item"), sf.col("degree"),
+          sf.coalesce(sf.col("n_triangles"), sf.lit(0L)).as("n_triangles"),
+          sf.when(sf.col("degree") >= 2, gf.roundAt(
+            sf.coalesce(sf.col("n_triangles"), sf.lit(0L)).cast("double") /
+              ((sf.col("degree") * (sf.col("degree") - 1)).cast("double") / 2), 6))
+            .as("local_cc"))
+    }.orderBy("item")
 
   /** HITS hubs & authorities (Kleinberg 1999, JACM 46(5)) over a
     * DIRECTED bipartite edge list — the centrality pair PageRank's
@@ -1638,76 +1583,38 @@ object Graph {
                     iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val SCALE = 1000000L // 1e6
-    val plain = df.select(sf.col(srcCol).as("src"), sf.col(dstCol).as("dst"))
-      .distinct().persist()
-    // loop invariant, but the per-half-round join key ALTERNATES
-    // (authority sums probe on src, hub sums on dst) — above the
-    // broadcast cap persist one copy pre-partitioned+sorted per key so
-    // neither half-round re-shuffles |E| rows; below it one plain
-    // cache serves both (the score side broadcasts).
-    // gate on the LARGER side's node count (each half-round broadcasts
-    // one side's score frame) — one materializing agg job, ±2 % HLL
-    val sides = plain.agg(
-      sf.approx_count_distinct(sf.col("src")).as("ns"),
-      sf.approx_count_distinct(sf.col("dst")).as("nd")).head()
-    val big = math.max(sides.getLong(0), sides.getLong(1)) >
-      broadcastNodeCap(plain.sparkSession)
-    val (eSrc, eDst) =
-      if (big) {
-        val s = plain.repartition(sf.col("src")).sortWithinPartitions("src").persist()
-        val d = plain.repartition(sf.col("dst")).sortWithinPartitions("dst").persist()
-        s.count(); d.count()
-        plain.unpersist()
-        (s, d)
-      } else (plain, plain)
     // (score·SCALE) div max — one-row broadcast, integer-exact; raw
-    // is read twice (sum + max) so the caller hands it in persisted
+    // is read twice (sum + max), so each raw sum frame is persisted
+    // (the normalized score frames are read once per round)
     def maxNorm(raw: DataFrame, node: String): DataFrame = {
       val mx = raw.agg(sf.max("__s").as("__mx"))
       raw.crossJoin(sf.broadcast(mx))
         .select(sf.col(node), sf.expr(s"(__s * ${SCALE}L) div __mx").as("__v"))
     }
-    // each half-round reads its input score frame TWICE (sum + max),
-    // so lineage quadruples per round: persist dedups execution, and
-    // every UnpersistBatch rounds an eager localCheckpoint cuts the
-    // plan tree (the relaxRounds discipline — bounded driver planning
-    // cost at any round budget)
-    var hub = eSrc.select(sf.col("src")).distinct()
-      .select(sf.col("src"), sf.lit(SCALE).as("__v"))
-    var auth: DataFrame = null
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    // only the raw sum frames persist (each is read twice: sum + max);
-    // the normalized score frames are read once per round — persisting
-    // them would just add node-table cache writes
-    for (r <- 1 to iters) {
-      val rawA = eSrc.join(hub, "src")
-        .groupBy("dst").agg(sf.sum("__v").as("__s")).persist()
-      auth = maxNorm(rawA, "dst")
-      val rawH = eDst.join(auth, "dst")
-        .groupBy("src").agg(sf.sum("__v").as("__s")).persist()
-      hub = maxNorm(rawH, "src")
-      toFree += rawA; toFree += rawH
-      if (r % UnpersistBatch == 0 && r < iters) {
-        val (ckA, ckH) = (auth.localCheckpoint(true), hub.localCheckpoint(true))
-        toFree.foreach(_.unpersist()); toFree.clear()
-        auth = ckA; hub = ckH
+    loop { lp =>
+      // the per-half-round join key ALTERNATES (authority sums probe
+      // on src, hub sums on dst): above the broadcast cap one copy is
+      // pre-partitioned per key; the gate reads the LARGER side
+      lp.prepare(df.select(sf.col(srcCol).as("src"), sf.col(dstCol).as("dst"))
+        .distinct(), "src", "dst")()
+      val (eSrc, eDst) = (lp.edges("src"), lp.edges("dst"))
+      val hub0 = eSrc.select(sf.col("src")).distinct()
+        .select(sf.col("src"), sf.lit(SCALE).as("__v"))
+      val Seq(hub, auth) = lp.iterateAll(iters, Seq(hub0)) { state =>
+        val auth = maxNorm(lp.keep(eSrc.join(state.head, "src")
+          .groupBy("dst").agg(sf.sum("__v").as("__s"))), "dst")
+        val hub = maxNorm(lp.keep(eDst.join(auth, "dst")
+          .groupBy("src").agg(sf.sum("__v").as("__s"))), "src")
+        Seq(hub, auth)
       }
-    }
-    // end-of-loop release: at the default iters <= UnpersistBatch the
-    // in-loop cut never fires, so ~2·iters raw-sum frames plus the edge
-    // invariant would linger in the cache for the library caller's
-    // whole session — materialize both node-sized sides once, then
-    // free everything the loop persisted.
-    val fa = auth.localCheckpoint(true)
-    val fh = hub.localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    eSrc.unpersist()
-    if (big) eDst.unpersist()
-    fa.select(sf.lit("auth").as("side"), sf.col("dst").as("item"),
-        sf.col("__v").as("score_fx"))
-      .union(fh.select(sf.lit("hub").as("side"), sf.col("src").as("item"),
-        sf.col("__v").as("score_fx")))
-      .orderBy(sf.col("side"), sf.col("score_fx").desc, sf.col("item"))
+      // auth first: hub's plan reads the last auth raw-sum cache too,
+      // and one plan touching an unfilled cache twice pays twice
+      auth.localCheckpoint(true)
+        .select(sf.lit("auth").as("side"), sf.col("dst").as("item"),
+          sf.col("__v").as("score_fx"))
+        .union(hub.select(sf.lit("hub").as("side"), sf.col("src").as("item"),
+          sf.col("__v").as("score_fx")))
+    }.orderBy(sf.col("side"), sf.col("score_fx").desc, sf.col("item"))
   }
 
   /** Eigenvector centrality (Bonacich 1972) over the undirected
@@ -1731,83 +1638,51 @@ object Graph {
     * destination sum + a one-row broadcast max — the [[pageRank]] loop
     * shape; edges persist as the loop invariant, only scores move. */
   def eigenvectorCentrality(df: DataFrame, basketCol: String, itemCol: String,
-                            minPairCount: Long = 2, iters: Int = 3): DataFrame = {
-    // Symmetric-graph fast path ([[pageRank]] rationale): mined edges
-    // carry both directions, so the per-round in-neighbor sum covers
-    // every node and the general path's `nodes LEFT JOIN` + coalesce-0
-    // (which exists for isolated nodes of arbitrary pre-mined lists)
-    // is an identity — dropped. PprSymmetricSpec pins equality with
-    // [[eigenvectorCentralityFromEdges]] on the same mined edges.
-    require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000L
-    val edges = coPartitionLoopEdges(
-      minedEdges(df, basketCol, itemCol, minPairCount))
-    val nodes = edges.select(sf.col("src").as("item")).distinct()
-    var x = nodes.select(sf.col("item"), sf.lit(SCALE).as("__v"))
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to iters) {
-      val raw = edges.join(x.select(sf.col("item").as("src"), sf.col("__v")), "src")
-        .groupBy("dst").agg(sf.sum("__v").as("__s")).persist()
-      toFree += raw
-      val mx = raw.agg(sf.max("__s").as("__mx"))
-      x = raw.crossJoin(sf.broadcast(mx))
-        .select(sf.col("dst").as("item"),
-          sf.expr(s"(__s * ${SCALE}L) div __mx").as("__v"))
-      if (r % UnpersistBatch == 0 && r < iters) {
-        val ck = x.localCheckpoint(true)
-        toFree.foreach(_.unpersist()); toFree.clear()
-        x = ck
-      }
-    }
-    val fx = x.localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    edges.unpersist()
-    fx.select(sf.col("item"), sf.col("__v").as("eig_fx"))
-      .orderBy(sf.col("eig_fx").desc, sf.col("item"))
-  }
+                            minPairCount: Long = 2, iters: Int = 3): DataFrame =
+    eigenLoop(minedEdges(df, basketCol, itemCol, minPairCount), iters, symmetric = true)
 
   /** [[eigenvectorCentrality]] over a pre-mined directed edge list
     * (both directions per undirected pair — the mine-once
     * `*FromEdges` family member). */
-  def eigenvectorCentralityFromEdges(edges0: DataFrame, iters: Int = 3): DataFrame = {
+  def eigenvectorCentralityFromEdges(edges0: DataFrame, iters: Int = 3): DataFrame =
+    eigenLoop(edges0, iters, symmetric = false)
+
+  private def eigenLoop(edges0: DataFrame, iters: Int, symmetric: Boolean): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000L // 1e6
-    val ownsEdges = !callerCached(edges0)
-    val edges = if (ownsEdges) edges0.persist() else edges0
-    val nodes = edges.select(sf.col("src").as("item"))
-      .union(edges.select(sf.col("dst").as("item"))).distinct().persist()
-    // only raw persists (read twice per round: sum + max); x is read
-    // once per round, so lineage stays linear and the batched
-    // localCheckpoint (relaxRounds discipline) bounds the plan tree
-    var x = nodes.select(sf.col("item"), sf.lit(SCALE).as("__v"))
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to iters) {
-      val raw = edges.join(x.select(sf.col("item").as("src"), sf.col("__v")), "src")
-        .groupBy("dst").agg(sf.sum("__v").as("__s")).persist()
-      toFree += raw
-      val mx = raw.agg(sf.max("__s").as("__mx"))
-      // isolated nodes (none in a mined co-occurrence graph, possible
-      // in an arbitrary pre-mined list) pin to exactly 0
-      x = nodes.join(raw.crossJoin(sf.broadcast(mx))
+    loop { lp =>
+      val nodes =
+        if (symmetric) { lp.prepare(edges0, "src")(); nodesOf(withDst = false)(lp.edges("src")) }
+        else lp.prepareNodes(edges0, persisted = true, nodesOf(withDst = true))._2
+      powerLoop(lp, nodes, iters, symmetric, floor = 0L) { sums =>
+        val raw = lp.keep(sums) // read twice: sum + max
+        raw.crossJoin(sf.broadcast(raw.agg(sf.max("__s").as("__mx"))))
           .select(sf.col("dst").as("item"),
-            sf.expr(s"(__s * ${SCALE}L) div __mx").as("__n")),
-          Seq("item"), "left")
-        .select(sf.col("item"), sf.coalesce(sf.col("__n"), sf.lit(0L)).as("__v"))
-      if (r % UnpersistBatch == 0 && r < iters) {
-        val ck = x.localCheckpoint(true)
-        toFree.foreach(_.unpersist()); toFree.clear()
-        x = ck
-      }
+            sf.expr(s"(__s * ${PowerScale}L) div __mx").as("__n"))
+      }.select(sf.col("item"), sf.col("__v").as("eig_fx"))
+    }.orderBy(sf.col("eig_fx").desc, sf.col("item"))
+  }
+
+  /** Fixed-point scale of the [[powerLoop]] family (1e6). */
+  private val PowerScale = 1000000L
+
+  /** The bounded power iteration behind eigenvector and Katz
+    * centrality: x0 = PowerScale on every node; each round the
+    * in-neighbor sums (dst, __s = Σ_{u→v} x(u)) go through `update`
+    * to (item, __n), and x' = coalesce(__n, 0) + `floor`. `symmetric`
+    * (mined) edge lists give every node in-edges every round, so the
+    * general path's `nodes LEFT JOIN` — which pins isolated nodes of an
+    * arbitrary pre-mined list to `floor` — is an identity there and is
+    * dropped (PprSymmetricSpec pins the two paths equal). */
+  private def powerLoop(lp: Loop, nodes: DataFrame, iters: Int, symmetric: Boolean,
+                        floor: Long)(update: DataFrame => DataFrame): DataFrame = {
+    val edges = lp.edges("src")
+    lp.iterate(iters, nodes.select(sf.col("item"), sf.lit(PowerScale).as("__v"))) { x =>
+      val next = update(edges
+        .join(x.select(sf.col("item").as("src"), sf.col("__v")), "src")
+        .groupBy("dst").agg(sf.sum("__v").as("__s")))
+      (if (symmetric) next else nodes.join(next, Seq("item"), "left"))
+        .select(sf.col("item"), (sf.coalesce(sf.col("__n"), sf.lit(0L)) + floor).as("__v"))
     }
-    // end-of-loop release (the hitsBipartite discipline): one eager
-    // node-sized checkpoint, then free the raw frames, the node
-    // invariant, and — only if this loop persisted it — the edge list.
-    val fx = x.localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    nodes.unpersist()
-    if (ownsEdges) edges.unpersist()
-    fx.select(sf.col("item"), sf.col("__v").as("eig_fx"))
-      .orderBy(sf.col("eig_fx").desc, sf.col("item"))
   }
 
   /** Katz centrality (Katz 1953), truncated damped-path form: x =
@@ -1838,112 +1713,46 @@ object Graph {
     * in-neighbor sum (shuffle = |edges|), loop invariants persisted,
     * the relaxRounds / UnpersistBatch lineage discipline. */
   def katzCentrality(df: DataFrame, basketCol: String, itemCol: String,
-                     minPairCount: Long = 2, iters: Int = 3): DataFrame = {
-    // Symmetric-graph fast path ([[pageRank]] rationale; equality with
-    // [[katzCentralityFromEdges]] pinned by PprSymmetricSpec): every
-    // node of a mined edge list has in-edges, so the per-round
-    // in-neighbor sum covers all nodes and the node merge join +
-    // coalesce-0 (isolated-node handling for arbitrary directed
-    // lists) drops out. The int64 overflow guard is unchanged.
-    require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000L
-    val edges = coPartitionLoopEdges(
-      minedEdges(df, basketCol, itemCol, minPairCount))
-    val dmaxRow = edges.groupBy("dst").agg(sf.count(sf.lit(1)).as("__d"))
-      .agg(sf.max("__d")).collect()
-    val dmax = if (dmaxRow.isEmpty || dmaxRow(0).isNullAt(0)) 1L
-               else math.max(1L, dmaxRow(0).getLong(0))
-    var xmax = BigInt(SCALE)
-    var sumOk = true
-    for (_ <- 1 to iters) {
-      val s = xmax * dmax
-      if (s > Long.MaxValue) sumOk = false
-      xmax = s / 8 + SCALE
-    }
-    if (!sumOk) {
-      edges.unpersist()
-      throw new IllegalArgumentException(
-        s"katzCentrality: iters=$iters with max in-degree $dmax " +
-        "would overflow the exact int64 fixed point (worst-case in-neighbor " +
-        "sum exceeds Long.MaxValue) — lower iters or pre-contract hubs")
-    }
-    val nodes = edges.select(sf.col("src").as("item")).distinct()
-    var x = nodes.select(sf.col("item"), sf.lit(SCALE).as("__v"))
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to iters) {
-      x = edges.join(x.select(sf.col("item").as("src"), sf.col("__v")), "src")
-        .groupBy("dst").agg(sf.sum("__v").as("__s"))
-        .select(sf.col("dst").as("item"),
-          (sf.expr("__s div 8") + SCALE).as("__v"))
-      if (r % UnpersistBatch == 0 && r < iters) {
-        val ck = x.localCheckpoint(true)
-        toFree.foreach(_.unpersist()); toFree.clear()
-        x = ck
-      }
-    }
-    val fx = x.localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    edges.unpersist()
-    fx.select(sf.col("item"), sf.col("__v").as("katz_fx"))
-      .orderBy(sf.col("katz_fx").desc, sf.col("item"))
-  }
+                     minPairCount: Long = 2, iters: Int = 3): DataFrame =
+    katzLoop(minedEdges(df, basketCol, itemCol, minPairCount), iters,
+      symmetric = true, "katzCentrality")
 
   /** [[katzCentrality]] over a pre-mined directed edge list — the
     * mine-once `*FromEdges` family member. */
-  def katzCentralityFromEdges(edges0: DataFrame, iters: Int = 3): DataFrame = {
+  def katzCentralityFromEdges(edges0: DataFrame, iters: Int = 3): DataFrame =
+    katzLoop(edges0, iters, symmetric = false, "katzCentralityFromEdges")
+
+  private def katzLoop(edges0: DataFrame, iters: Int, symmetric: Boolean,
+                       name: String): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val SCALE = 1000000L
-    val ownsEdges = !callerCached(edges0)
-    val edges = if (ownsEdges) edges0.persist() else edges0
-    // Runtime overflow guard: the docstring's int64 bound (max x ≈
-    // β·(d_max/8)^iters) silently WRAPS under non-ANSI long sums at
-    // realistic hub degrees well inside the [1,20] iters cap, producing
-    // garbage centralities with no signal. Price the worst case in
-    // BigInt from the graph's actual max in-degree (conservative:
-    // assumes every in-neighbor of the hub carries the max score) and
-    // fail fast instead. One count-shaped agg over the persisted edge
-    // list — noise next to the per-round edge join it protects.
-    val dmaxRow = edges.groupBy("dst").agg(sf.count(sf.lit(1)).as("__d"))
-      .agg(sf.max("__d")).collect()
-    val dmax = if (dmaxRow.isEmpty || dmaxRow(0).isNullAt(0)) 1L
-               else math.max(1L, dmaxRow(0).getLong(0))
-    var xmax = BigInt(SCALE)
-    var sumOk = true
-    for (_ <- 1 to iters) {
-      val s = xmax * dmax // the per-node in-neighbor SUM — the wrap point
-      if (s > Long.MaxValue) sumOk = false
-      xmax = s / 8 + SCALE
-    }
-    if (!sumOk) {
-      if (ownsEdges) edges.unpersist()
-      throw new IllegalArgumentException(
-        s"katzCentralityFromEdges: iters=$iters with max in-degree $dmax " +
+    loop { lp =>
+      // Runtime overflow guard: the int64 bound (max x ≈
+      // β·(d_max/8)^iters) silently WRAPS under non-ANSI long sums at
+      // realistic hub degrees well inside the [1,20] iters cap. The
+      // probe job measures the actual max in-degree (its node figure is
+      // the exact in-node count); the worst case is priced in BigInt
+      // (every in-neighbor of the hub carrying the max score).
+      val stats = lp.prepare(edges0, "src")(
+        _.groupBy("dst").agg(sf.count(sf.lit(1)).as("__d"))
+          .agg(sf.count(sf.lit(1)), sf.max("__d")))
+      val dmax = if (stats.isNullAt(1)) 1L else math.max(1L, stats.getLong(1))
+      var xmax = BigInt(PowerScale)
+      var sumOk = true
+      for (_ <- 1 to iters) {
+        val s = xmax * dmax // the per-node in-neighbor SUM — the wrap point
+        if (s > Long.MaxValue) sumOk = false
+        xmax = s / 8 + PowerScale
+      }
+      if (!sumOk) throw new IllegalArgumentException(
+        s"$name: iters=$iters with max in-degree $dmax " +
         "would overflow the exact int64 fixed point (worst-case in-neighbor " +
         "sum exceeds Long.MaxValue) — lower iters or pre-contract hubs")
-    }
-    val nodes = edges.select(sf.col("src").as("item"))
-      .union(edges.select(sf.col("dst").as("item"))).distinct().persist()
-    var x = nodes.select(sf.col("item"), sf.lit(SCALE).as("__v"))
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (r <- 1 to iters) {
-      val raw = edges.join(x.select(sf.col("item").as("src"), sf.col("__v")), "src")
-        .groupBy("dst").agg(sf.sum("__v").as("__s"))
-      x = nodes.join(raw.select(sf.col("dst").as("item"),
-          sf.expr("__s div 8").as("__n")), Seq("item"), "left")
-        .select(sf.col("item"),
-          (sf.coalesce(sf.col("__n"), sf.lit(0L)) + SCALE).as("__v"))
-      if (r % UnpersistBatch == 0 && r < iters) {
-        val ck = x.localCheckpoint(true)
-        toFree.foreach(_.unpersist()); toFree.clear()
-        x = ck
-      }
-    }
-    val fx = x.localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    nodes.unpersist()
-    if (ownsEdges) edges.unpersist()
-    fx.select(sf.col("item"), sf.col("__v").as("katz_fx"))
-      .orderBy(sf.col("katz_fx").desc, sf.col("item"))
+      val nodes = nodesOf(withDst = !symmetric)(lp.edges("src"))
+      powerLoop(lp, if (symmetric) nodes else lp.own(nodes), iters, symmetric,
+          floor = PowerScale)(
+        _.select(sf.col("dst").as("item"), sf.expr("__s div 8").as("__n")))
+        .select(sf.col("item"), sf.col("__v").as("katz_fx"))
+    }.orderBy(sf.col("katz_fx").desc, sf.col("item"))
   }
 
   /** Categorical attribute assortativity (Newman 2003, eq. 2): over
@@ -2136,8 +1945,8 @@ object Graph {
     * min (shuffle ≤ |seeds|·|E| worst case, in practice frontier-
     * bounded). The SEED SET is the knob: centrality-for-everyone is an
     * all-pairs ambition, centrality for a bounded candidate list is
-    * linear in it. Rounds ≤ 8 bound lineage growth (2⁸ subplans) below
-    * the relaxRounds checkpoint threshold. */
+    * linear in it. Rounds ≤ 8 bound the state's growth; the shared
+    * loop's lineage cut bounds the plan. */
   def closenessCentrality(df: DataFrame, basketCol: String, itemCol: String,
                           seedPred: Column => Column,
                           minPairCount: Long = 2, rounds: Int = 3): DataFrame =
@@ -2151,31 +1960,20 @@ object Graph {
   private def taggedBfs(edges0: DataFrame, seedPred: Column => Column,
                         rounds: Int)(finish: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1, 8], got $rounds")
-    val ownsEdges = !callerCached(edges0)
-    // loop invariant: pre-partition on the per-round join key above
-    // the broadcast cap (no-op on broadcastable graphs)
-    val edges = if (ownsEdges) coPartitionLoopEdges(edges0) else edges0
-    val nodes = edges.select(sf.col("src").as("item"))
-      .union(edges.select(sf.col("dst").as("item"))).distinct()
-    var state = nodes.filter(seedPred(sf.col("item")))
-      .select(sf.col("item").as("seed"), sf.col("item"), sf.lit(0L).as("dist"))
-      .persist()
-    val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (_ <- 1 to rounds) {
-      val prev = state
-      val relax = edges.join(prev, sf.col("src") === sf.col("item"))
-        .select(sf.col("seed"), sf.col("dst").as("item"),
-          (sf.col("dist") + sf.lit(1L)).as("dist"))
-      state = prev.unionByName(relax)
-        .groupBy("seed", "item").agg(sf.min("dist").as("dist"))
-        .persist()
-      toFree += prev
+    loop { lp =>
+      lp.prepare(edges0, "src")()
+      val edges = lp.edges("src")
+      val state0 = lp.keep(nodesOf(withDst = true)(edges)
+        .filter(seedPred(sf.col("item")))
+        .select(sf.col("item").as("seed"), sf.col("item"), sf.lit(0L).as("dist")))
+      finish(lp.iterate(rounds, state0) { prev =>
+        val relax = edges.join(prev, sf.col("src") === sf.col("item"))
+          .select(sf.col("seed"), sf.col("dst").as("item"),
+            (sf.col("dist") + sf.lit(1L)).as("dist"))
+        lp.keep(prev.unionByName(relax)
+          .groupBy("seed", "item").agg(sf.min("dist").as("dist")))
+      })
     }
-    val out = finish(state).localCheckpoint(true)
-    toFree.foreach(_.unpersist()); toFree.clear()
-    state.unpersist()
-    if (ownsEdges) edges.unpersist()
-    out
   }
 
   /** [[closenessCentrality]] over a pre-mined directed edge list — the

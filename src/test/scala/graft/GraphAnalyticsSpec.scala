@@ -773,23 +773,71 @@ class GraphAnalyticsSpec extends SparkFunSuite {
     assert(rt.getAs[Double]("modularity") == 0.0, rt.toString)
   }
 
-  test("relaxation/peel loops free superseded frames: bounded persisted RDDs") {
-    import spark.implicits._
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val edges = (chain ++ chain.map(_.swap)).toDF("src", "dst")
-    // 12 rounds would cache 12 superseded dist frames without the
-    // batched unpersist; the contract is <= UnpersistBatch(5) pending
-    // + the live frame + the caller's edge frame
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Graph.bfsHopsFromEdges(edges, _ === sf.lit(1L), rounds = 12).collect()
-    val afterBfs = spark.sparkContext.getPersistentRDDs.size
-    assert(afterBfs - before <= 7,
-      s"bfs leaked persisted frames: ${afterBfs - before}")
-    Graph.kCoreFromEdges(edges, k = 1, rounds = 12).collect()
-    val afterKc = spark.sparkContext.getPersistentRDDs.size
-    assert(afterKc - afterBfs <= 7,
-      s"k-core leaked persisted frames: ${afterKc - afterBfs}")
+  test("loop entry points free every cache entry they create") {
+    // CacheManager entries only: each result's own localCheckpoint RDD
+    // shows up in getPersistentRDDs by design and is not counted here
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val baskets = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (2L, 11L),
+      (3L, 11L), (3L, 12L), (4L, 12L), (4L, 13L), (5L, 10L), (5L, 13L),
+      (6L, 10L), (6L, 11L), (6L, 13L), (7L, 13L), (7L, 14L)).toDF("basket", "item")
+    val seed = (c: org.apache.spark.sql.Column) => c.isin(10L, 13L)
+    def edges = Graph.minedEdges(baskets, "basket", "item", 1)
+    def weighted = Graph.minedWeightedEdges(baskets, "basket", "item", 1)
+    // 6 rounds cross one UnpersistBatch lineage cut; 12 cross two
+    val mined: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(baskets, "basket", "item", 1, 6)),
+      "pageRankWeighted" -> (() => Graph.pageRankWeighted(baskets, "basket", "item", 1, 6)),
+      "personalizedPageRank" -> (() =>
+        Graph.personalizedPageRank(baskets, "basket", "item", seed, 1, 6)),
+      "bfsHops" -> (() => Graph.bfsHops(baskets, "basket", "item", seed, 1, 12)),
+      "sssp" -> (() => Graph.sssp(baskets, "basket", "item", seed, 1, 6)),
+      "labelPropagation" -> (() => Graph.labelPropagation(baskets, "basket", "item", 1, 6)),
+      "communityQuality" -> (() => Graph.communityQuality(baskets, "basket", "item", 1, 6)),
+      "kCore" -> (() => Graph.kCore(baskets, "basket", "item", 2, 1, 12)),
+      // hits reads each score frame four times a round: 3 rounds keep the
+      // uncut plan small
+      "hitsBipartite" -> (() => Graph.hitsBipartite(baskets, "basket", "item", 3)),
+      "eigenvectorCentrality" -> (() =>
+        Graph.eigenvectorCentrality(baskets, "basket", "item", 1, 6)),
+      "katzCentrality" -> (() => Graph.katzCentrality(baskets, "basket", "item", 1, 6)),
+      "closenessCentrality" -> (() =>
+        Graph.closenessCentrality(baskets, "basket", "item", seed, 1, 6)),
+      "eccentricity" -> (() => Graph.eccentricity(baskets, "basket", "item", seed, 1, 6)))
+    val fromEdges: Seq[(String, () => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      ("personalizedPageRankFromEdges", () => edges,
+        Graph.personalizedPageRankFromEdges(_, seed, 6)),
+      ("bfsHopsFromEdges", () => edges, Graph.bfsHopsFromEdges(_, seed, 12)),
+      ("ssspFromEdges", () => weighted, Graph.ssspFromEdges(_, seed, 6)),
+      ("labelPropagationFromEdges", () => edges, Graph.labelPropagationFromEdges(_, 6)),
+      ("communityQualityFromEdges", () => edges,
+        e => Graph.communityQualityFromEdges(e, Graph.labelPropagationFromEdges(e, 3))),
+      ("kCoreFromEdges", () => edges, Graph.kCoreFromEdges(_, 1, 12)),
+      ("eigenvectorCentralityFromEdges", () => edges,
+        Graph.eigenvectorCentralityFromEdges(_, 6)),
+      ("katzCentralityFromEdges", () => edges, Graph.katzCentralityFromEdges(_, 6)),
+      ("closenessFromEdges", () => edges, Graph.closenessFromEdges(_, seed, 6)),
+      ("eccentricityFromEdges", () => edges, Graph.eccentricityFromEdges(_, seed, 6)))
     spark.catalog.clearCache()
+    val calls = mined ++ fromEdges.map { case (name, in, op) => name -> (() => op(in())) }
+    for ((name, call) <- calls) {
+      assert(call().collect().nonEmpty, name)
+      assert(cache.isEmpty, s"$name left a Dataset cache entry")
+    }
+    for ((name, in, op) <- fromEdges) {
+      val cached = in().persist()
+      op(cached).collect()
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"$name unpersisted the caller's edges")
+      cached.unpersist()
+      assert(cache.isEmpty, s"$name left a cache entry beside the caller's edges")
+    }
+    // the throw path releases too: katz's overflow guard fails after
+    // the loop persisted the edges
+    val hub = (1 to 40).map(i => (s"n$i", "hub")).toDF("src", "dst")
+    intercept[IllegalArgumentException](Graph.katzCentralityFromEdges(hub, iters = 20))
+    assert(cache.isEmpty, "katz's overflow guard left the edge cache behind")
   }
 
   test("Graph.degreeAssortativity: star is -1, regular cycle NULL") {
