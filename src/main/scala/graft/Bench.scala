@@ -57,12 +57,16 @@ object Bench {
       spark.catalog.clearCache()
     }
     System.gc()
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // (elapsed seconds, whether the query ran without throwing)
+    def timeOnce(name: String,
+                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ran =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // Queries are independent: free persisted frames between them so
       // later queries aren't taxed by earlier queries' caches. Broadcast
@@ -74,7 +78,7 @@ object Bench {
       // Let the (async) ContextCleaner finish removing freed blocks
       // before the next query's clock starts, instead of during it.
       Thread.sleep(200)
-      dt
+      (dt, ran)
     }
     // Steady-state timing: two passes per query, report the min. A cold
     // single-JVM pass conflates each query's cost with whatever the JIT
@@ -91,12 +95,20 @@ object Bench {
     // reproducible bit-for-bit.
     val seed = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED", "13").toLong
     def shuffled(s: Long) = new scala.util.Random(s).shuffle(selected.sortBy(_._1))
-    val order1 = shuffled(seed)
-    val order2 = shuffled(seed + 1)
-    val pass1 = order1.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
-    val pass2 = order2.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
-    val results = selected.map(_._1).sorted
-      .map(name => name -> math.min(pass1(name), pass2(name)))
+    val passes = Seq(seed, seed + 1).map(s =>
+      shuffled(s).map { case (name, fn) => name -> timeOnce(name, fn) }.toMap)
+    // a failure's elapsed time is not a query time: min over the passes
+    // that ran; a query that failed in both keeps its elapsed time so
+    // the line's format is unchanged
+    val results = selected.map(_._1).sorted.map { name =>
+      val runs = passes.map(_(name))
+      val ran = runs.filter(_._2)
+      name -> (if (ran.nonEmpty) ran else runs).map(_._1).min
+    }
+    val failed = results.map(_._1).filter(name => passes.exists(p => !p(name)._2))
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] failed: ${failed.mkString(",")} " +
+        s"(${failed.size} of ${selected.size})")
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

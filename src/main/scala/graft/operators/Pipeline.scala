@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => sf}
 import graft.dq.QualityChecks
@@ -27,19 +29,36 @@ object Pipeline {
       dimPart = Tables.load(spark, dir, "part"),
       dimSupplier = Tables.load(spark, dir, "supplier"))
 
-  /** Build, write (facts partitioned by return flag — the reference
-    * partitions every sink, etl.py:251/485), and quality-check.
-    * Returns one row per check: (check_name, passed 0/1). */
+  /** Build, write, and quality-check the star schema. Returns one row
+    * per check: (check_name, passed 0/1), as a lazy DataFrame.
+    *
+    * The five sinks (the reference partitions every sink, etl.py:251/485)
+    * are independent, so they are written concurrently: fact_sales by
+    * `l_returnflag`, dim_customer by `region`, dim_date, dim_part and
+    * dim_supplier unpartitioned. Each write runs on its own thread of a
+    * pool created for this call (so the jobs keep the caller's Spark
+    * local properties: job group, description), fact first, and
+    * runStarSchema returns only after every write has finished. If any
+    * write fails, it still waits for all of them, then throws the first
+    * failure in the order above with the others added as suppressed.
+    *
+    * The checks read each table back with the written frame's schema,
+    * so no parquet footer-inference job runs; partition values still
+    * come from the directory names. */
   def runStarSchema(spark: SparkSession, dir: String, outDir: String): DataFrame = {
     val t = buildStarSchema(spark, dir)
-    StarSchema.writePartitioned(t.factSales, s"$outDir/fact_sales", Seq("l_returnflag"))
-    StarSchema.writePartitioned(t.dimCustomer, s"$outDir/dim_customer", Seq("region"))
-    t.dimDate.write.mode("overwrite").parquet(s"$outDir/dim_date")
-    t.dimPart.write.mode("overwrite").parquet(s"$outDir/dim_part")
-    t.dimSupplier.write.mode("overwrite").parquet(s"$outDir/dim_supplier")
-
-    val written = Seq("fact_sales", "dim_customer", "dim_date", "dim_part", "dim_supplier")
-      .map(n => n -> spark.read.parquet(s"$outDir/$n"))
+    val sinks = Seq(
+      ("fact_sales", t.factSales, Seq("l_returnflag")),
+      ("dim_customer", t.dimCustomer, Seq("region")),
+      ("dim_date", t.dimDate, Nil),
+      ("dim_part", t.dimPart, Nil),
+      ("dim_supplier", t.dimSupplier, Nil))
+    runConcurrently(sinks.map { case (n, df, cols) =>
+      () => StarSchema.writePartitioned(df, s"$outDir/$n", cols)
+    })
+    val written = sinks.map { case (n, df, _) =>
+      n -> spark.read.schema(df.schema).parquet(s"$outDir/$n")
+    }
 
     // Check 1: every table non-empty (validate_model_row_count).
     val rowChecks = written.map { case (n, df) =>
@@ -62,6 +81,34 @@ object Pipeline {
         (sf.col("violations") === 0).cast("int").as("passed"))
 
     (rowChecks ++ keyChecks :+ factOk).reduce(_ union _).orderBy("check_name")
+  }
+
+  /** Runs every action on its own thread of a pool created for this
+    * call, so the threads inherit the caller's Spark local properties.
+    * Returns, or throws, only after every action has finished and the
+    * pool has terminated. If actions fail, the first failure in
+    * `actions` order is rethrown with the others added as suppressed.
+    * An interrupt while waiting interrupts the actions, still waits for
+    * them, and is re-asserted on the calling thread. */
+  private[graft] def runConcurrently(actions: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(actions.size)
+    val tasks = try actions.map(a => pool.submit(new Callable[Unit] { def call(): Unit = a() }))
+    finally {
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true; pool.shutdownNow() }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    val failures = tasks.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
   }
 
   /** The LLM-training-data curation stack, end to end — the library's

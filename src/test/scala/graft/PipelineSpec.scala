@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{functions => sf}
 import graft.operators.Pipeline
@@ -18,6 +18,81 @@ class PipelineSpec extends SparkFunSuite {
     val factDirs = new java.io.File(s"$out/fact_sales").listFiles()
       .map(_.getName).filter(_.startsWith("l_returnflag="))
     assert(factDirs.nonEmpty)
+  }
+
+  test("runStarSchema writes each star-schema frame to its own path") {
+    val out = Files.createTempDirectory("graft_etl_paths").toString
+    Pipeline.runStarSchema(spark, sf001, out)
+    val t = Pipeline.buildStarSchema(spark, sf001)
+    val expected = Seq(
+      ("fact_sales", t.factSales, Some("l_returnflag")),
+      ("dim_customer", t.dimCustomer, Some("region")),
+      ("dim_date", t.dimDate, None),
+      ("dim_part", t.dimPart, None),
+      ("dim_supplier", t.dimSupplier, None))
+    for ((name, frame, partCol) <- expected) {
+      // plain read (schema inferred from the files), columns in the
+      // frame's order: partition columns come back from the paths
+      val raw = spark.read.parquet(s"$out/$name")
+      assert(raw.columns.toSet == frame.columns.toSet, name)
+      val back = raw.select(frame.columns.map(sf.col).toSeq: _*)
+      assert(back.count() == frame.count(), name)
+      assert(back.exceptAll(frame).isEmpty, s"$name: rows not in its frame")
+      assert(frame.exceptAll(back).isEmpty, s"$name: frame rows not written")
+      val dirs = new java.io.File(s"$out/$name").listFiles().filter(_.isDirectory)
+        .map(_.getName)
+      partCol match {
+        case Some(c) => assert(dirs.nonEmpty && dirs.forall(_.startsWith(s"$c=")), s"$name: $dirs")
+        case None => assert(dirs.isEmpty, s"$name: $dirs")
+      }
+    }
+  }
+
+  test("runStarSchema's DQ gate fails unique_dim_supplier on a duplicated supplier") {
+    Files.createDirectories(Paths.get("target"))
+    val dir = Files.createTempDirectory(Paths.get("target"), "graft_dup_supplier")
+    for (f <- new java.io.File(sf001).listFiles() if f.getName != "supplier.parquet")
+      Files.copy(f.toPath, dir.resolve(f.getName))
+    val supplier = spark.read.parquet(s"$sf001/supplier.parquet")
+    supplier.union(supplier.orderBy("s_suppkey").limit(1))
+      .write.parquet(dir.resolve("supplier.parquet").toString)
+    val out = Files.createTempDirectory("graft_etl_dup").toString
+    val rows = Pipeline.runStarSchema(spark, dir.toString, out).collect()
+      .map(r => (r.getString(0), r.getInt(1))).toMap
+    assert(rows.size == 10)
+    assert(rows("unique_dim_supplier") == 0)
+    assert((rows - "unique_dim_supplier").values.forall(_ == 1), s"$rows")
+  }
+
+  test("runConcurrently waits for every action, then rethrows the first failure") {
+    val n = 5
+    val finished = new java.util.concurrent.atomic.AtomicIntegerArray(n)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val boom = new IllegalStateException("boom 1")
+    val actions = (0 until n).map { i => () =>
+      threads.add(Thread.currentThread)
+      seen.add(String.valueOf(spark.sparkContext.getLocalProperty("graft.test.prop")))
+      i match {
+        case 1 => throw boom
+        case 3 => Thread.sleep(300); throw new IllegalArgumentException("boom 3")
+        case _ => Thread.sleep(100L * i); finished.set(i, 1)
+      }
+    }
+    spark.sparkContext.setLocalProperty("graft.test.prop", "caller")
+    val thrown = try intercept[IllegalStateException](Pipeline.runConcurrently(actions))
+      finally spark.sparkContext.setLocalProperty("graft.test.prop", null)
+    assert(thrown eq boom)
+    assert(thrown.getSuppressed.map(_.getMessage).toSeq == Seq("boom 3"))
+    // the slowest action (4, 400 ms) ran to the end before the throw
+    assert(Seq(0, 2, 4).forall(finished.get(_) == 1))
+    assert(threads.size == n && !threads.contains(Thread.currentThread))
+    threads.forEach { t => t.join(5000); assert(!t.isAlive, t.getName) }
+    assert(seen.size == n && seen.toArray.forall(_ == "caller"))
+    // no failure: returns normally after all actions
+    val done = new java.util.concurrent.atomic.AtomicInteger()
+    Pipeline.runConcurrently(Seq.fill(3)(() => { Thread.sleep(50); done.incrementAndGet(); () }))
+    assert(done.get == 3)
   }
 
   test("end-to-end curation: funnel report, stage effects, split-partitioned write") {
