@@ -2,7 +2,7 @@
 # Dev runner: launch a graft main class with plain java (no sbt), using
 # the compiled classes + the image's Spark jars. Mirrors build.sbt's
 # forked-run JVM flags so measurements match `sbt runMain` numbers.
-# Usage: scripts/run_main.sh graft.Explain q119_pagerank /root/testdata/sf0.1 both
+# Usage: scripts/run_main.sh graft.Dev time <sfDir> q119_pagerank
 set -euo pipefail
 CLASSES=/root/repo/target/scala-2.13/classes
 ADD_OPENS=""

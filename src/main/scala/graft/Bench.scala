@@ -9,37 +9,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // WindowExec moves a partition-key group to a spillable buffer
-      // after 4096 rows by default; the window-heavy profiles (quantile
-      // ranks, sessionization, SCD2) have 10^5-row groups that fit
-      // memory fine — raise the in-memory threshold so they don't pay
-      // spill-format conversion under the benchmark's memory churn.
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", 1048576)
-      // The generated-class cache defaults to 100 entries; a 105-query
-      // suite compiles several codegen stages per query (and the warmup
-      // pass compiles them all up front), so an undersized cache evicts
-      // and queries pay Janino re-compiles mid-run.
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Dev-only filter: `runMain graft.Bench q22 q33` times just those
+    // queries (SparkEntry.select). The driver passes no args -> full run.
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = Session.local(Session.envCpus(32))
     // Untimed steady-state warmup: run EVERY query once at the smallest
     // scale factor. Generated code is schema-dependent, not
     // data-dependent, so this compiles + JITs every whole-stage-codegen
     // class the timed run will use, for pennies of data. Otherwise each
     // query's first pass pays seconds of compile-queue latency billed to
     // whichever query hits it — observed as 5-20x per-query swings.
-    // Dev-only filter: `runMain graft.Bench q22 q33` times just those
-    // queries (prefix match). The driver passes no args -> full run.
-    val wanted = args.toSet
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter { case (n, _) => wanted.exists(n.startsWith) }.toSeq
     val warmDir = "/root/testdata/sf0.001"
     val warmable = new java.io.File(warmDir).isDirectory
     // The warmup ALWAYS runs the full suite, even for filtered (pin)
@@ -50,8 +29,7 @@ object Bench {
     // suite number contains. Full warmup reproduces the same JIT +
     // code-cache state the suite numbers are measured under, which is
     // exactly what a pin has to hold fixed.
-    val warmSet = if (wanted.isEmpty) selected else SparkEntry.queries.toSeq
-    for ((_, fn) <- warmSet.sortBy(_._1) if warmable) {
+    for ((_, fn) <- SparkEntry.select(Nil) if warmable) {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
       spark.catalog.clearCache()
@@ -94,13 +72,13 @@ object Bench {
     // seed is pinned (env SPARK_GRAFT_BENCH_SEED) so a run is still
     // reproducible bit-for-bit.
     val seed = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED", "13").toLong
-    def shuffled(s: Long) = new scala.util.Random(s).shuffle(selected.sortBy(_._1))
+    def shuffled(s: Long) = new scala.util.Random(s).shuffle(selected)
     val passes = Seq(seed, seed + 1).map(s =>
       shuffled(s).map { case (name, fn) => name -> timeOnce(name, fn) }.toMap)
     // a failure's elapsed time is not a query time: min over the passes
     // that ran; a query that failed in both keeps its elapsed time so
     // the line's format is unchanged
-    val results = selected.map(_._1).sorted.map { name =>
+    val results = selected.map(_._1).map { name =>
       val runs = passes.map(_(name))
       val ran = runs.filter(_._2)
       name -> (if (ran.nonEmpty) ran else runs).map(_._1).min
@@ -118,7 +96,7 @@ object Bench {
     // beside the sources so every query's number survives the round.
     // FULL runs only: a dev-filtered run must not clobber the suite
     // numbers with its 2-query subset.
-    if (wanted.isEmpty)
+    if (args.isEmpty)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_FULL.json"), line + "\n")
       catch { case e: Throwable =>

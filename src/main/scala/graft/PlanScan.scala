@@ -3,17 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 
-/** Dev audit: scan EVERY query's physical plan for single-partition
+/** Plan audit: scan a query's optimized plan for single-partition
   * windows — a `WindowExec` whose partition spec is empty (Spark's
   * "No Partition Defined" warning: ALL rows move to one task) or
   * all-foldable (EliminateWindowPartitions strips literals, leaving
   * the same one-task shape without the warning). These are the
   * scale-killers the row-340 rule bans; `globalPrefixSums` /
-  * `globalDenseIds` are the sanctioned replacements. Prints one line
-  * per offender and exits 1 if any exist outside the documented
-  * bounded-by-construction allowlist.
-  *
-  * Usage: runMain graft.PlanScan [sfDir] [nameFilter,csv]
+  * `globalDenseIds` are the sanctioned replacements. Windows on the
+  * documented bounded-by-construction allowlist do not count. The
+  * sweep over every query is `runMain graft.Dev scan <sfDir> [name...]`.
   */
 object PlanScan {
   // Windows that are one-partition BY CONSTRUCTION over bounded frames
@@ -25,7 +23,7 @@ object PlanScan {
   private val BoundedNames = Set("__pid", "__sb")
 
   /** One query's unbounded one-task windows, as printable renderings —
-    * empty means the plan is clean. Shared by the CLI sweep below and
+    * empty means the plan is clean. Shared by the `Dev scan` sweep and
     * PlanScanSpec (which runs it over every query in the suite, so the
     * lorenzGini class of bug fails `sbt test` instead of waiting for a
     * manual sweep). Throws whatever the plan build throws — callers
@@ -49,38 +47,5 @@ object PlanScan {
       }).toSet
       names.exists(BoundedNames.contains)
     }.map(_.windowExpressions.mkString(";"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val filter: String => Boolean =
-      if (args.length > 1) { val s = args(1).split(",").toSet; s.contains }
-      else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if filter(name)) {
-      try {
-        val unbounded = unboundedWindows(spark, sfDir, fn)
-        if (unbounded.nonEmpty) {
-          bad += unbounded.size
-          println(s"[planscan] $name: ${unbounded.size} single-partition " +
-            s"window(s): ${unbounded.mkString(" | ")}")
-        }
-        spark.catalog.clearCache()
-      } catch {
-        case e: Exception =>
-          println(s"[planscan] $name: plan build failed: ${e.getMessage}")
-      }
-    }
-    println(s"[planscan] done, $bad unbounded single-partition window(s)")
-    spark.stop()
-    if (bad > 0) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => sf}
+import org.apache.spark.sql.{DataFrame, functions => sf}
 
 /** sf1.0 scale-checkpoint data generator — builds a 10x derivative of
   * the driver's sf0.1 tables under `target/sf1.0` so the heavy-tail
@@ -42,13 +42,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/sf1.0"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus(32))
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")

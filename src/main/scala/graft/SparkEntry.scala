@@ -43,6 +43,17 @@ object SparkEntry {
         |       THEN concat('?v=', CAST(doc_id % 4 AS STRING)) ELSE '' END)
         |END""".stripMargin).as("url"))
 
+  /** The queries a name list selects, sorted by name — Bench's args,
+    * Verify's filter and the Dev CLI all use this rule: no names
+    * selects every query, otherwise each name selects the queries it
+    * is a prefix of. Names that select nothing throw, all listed. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    val bad = names.filterNot(n => all.exists(_._1.startsWith(n)))
+    require(bad.isEmpty, s"no query matches: ${bad.mkString(", ")}")
+    if (names.isEmpty) all else all.filter { case (q, _) => names.exists(q.startsWith) }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_star_revenue" -> ((s, dir) => StarSchema.revenueByRegion(s, dir)),
 

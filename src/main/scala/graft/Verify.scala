@@ -1,40 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name,name...] */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local use;
-    // the driver always passes two args = run everything)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, Set.empty[String])
-      case Array(s, o, f) => (s, o, f.split(",").toSet)
+    // optional 3rd arg: comma-separated query names, SparkEntry.select's
+    // rule (local use; the driver always passes two args = run everything)
+    if (args.length != 2 && args.length != 3) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [name,name...]")
+      sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 50 queries × several codegen stages each overflow the 100-entry
-      // generated-class cache default (see Bench).
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = SparkEntry.select(args.drop(2).flatMap(_.split(",")).toSeq)
+    val spark = Session.local(Session.envCpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.flatMap { case (name, fn) =>
+      val ok =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
       // queries are independent; don't let one query's persisted frames
       // tax the rest of the run
       spark.catalog.clearCache()
+      if (ok) None else Some(name)
     }
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] failed: ${failed.mkString(",")} " +
+        s"(${failed.size} of ${selected.size})")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

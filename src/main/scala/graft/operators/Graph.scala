@@ -386,17 +386,17 @@ object Graph {
     /** Persist a round frame; freed at the next lineage cut. */
     def keep(df: DataFrame): DataFrame = { pending += df; df.persist() }
 
-    /** `rounds` synchronous steps from `init`. Every `UnpersistBatch`
+    /** `rounds` synchronous steps from `init`. Every `cutEvery`
       * rounds short of the last, the state is materialized with an
       * eager localCheckpoint — CUTTING LINEAGE: a frame read twice per
       * round doubles the plan tree every round, and the analyzer and
       * every AQE plan-description event walk it — and every frame
       * `keep` persisted since is freed. */
-    def iterateAll(rounds: Int, init: Seq[DataFrame])(
+    def iterateAll(rounds: Int, init: Seq[DataFrame], cutEvery: Int = UnpersistBatch)(
         step: Seq[DataFrame] => Seq[DataFrame]): Seq[DataFrame] =
       (1 to rounds).foldLeft(init) { (state, r) =>
         val next = step(state)
-        if (r % UnpersistBatch != 0 || r == rounds) next
+        if (r % cutEvery != 0 || r == rounds) next
         else {
           val cut = next.map(_.localCheckpoint(true))
           pending.foreach(_.unpersist()); pending.clear()
@@ -1548,6 +1548,11 @@ object Graph {
             .as("local_cc"))
     }.orderBy("item")
 
+  /** [[hitsBipartite]]'s lineage-cut cadence: an uncut segment holds
+    * 4^HitsCut copies of its first hub frame's plan (16 — the q266
+    * 2-round plan, which therefore runs uncut). */
+  private val HitsCut = 2
+
   /** HITS hubs & authorities (Kleinberg 1999, JACM 46(5)) over a
     * DIRECTED bipartite edge list — the centrality pair PageRank's
     * single score can't give: on an ownership/containment graph
@@ -1600,7 +1605,10 @@ object Graph {
       val (eSrc, eDst) = (lp.edges("src"), lp.edges("dst"))
       val hub0 = eSrc.select(sf.col("src")).distinct()
         .select(sf.col("src"), sf.lit(SCALE).as("__v"))
-      val Seq(hub, auth) = lp.iterateAll(iters, Seq(hub0)) { state =>
+      // each round reads the previous hub frame four times (two
+      // maxNorm self-joins), so the uncut plan quadruples per round:
+      // cut every HitsCut rounds instead of the loops' UnpersistBatch
+      val Seq(hub, auth) = lp.iterateAll(iters, Seq(hub0), HitsCut) { state =>
         val auth = maxNorm(lp.keep(eSrc.join(state.head, "src")
           .groupBy("dst").agg(sf.sum("__v").as("__s"))), "dst")
         val hub = maxNorm(lp.keep(eDst.join(auth, "dst")

@@ -795,9 +795,7 @@ class GraphAnalyticsSpec extends SparkFunSuite {
       "labelPropagation" -> (() => Graph.labelPropagation(baskets, "basket", "item", 1, 6)),
       "communityQuality" -> (() => Graph.communityQuality(baskets, "basket", "item", 1, 6)),
       "kCore" -> (() => Graph.kCore(baskets, "basket", "item", 2, 1, 12)),
-      // hits reads each score frame four times a round: 3 rounds keep the
-      // uncut plan small
-      "hitsBipartite" -> (() => Graph.hitsBipartite(baskets, "basket", "item", 3)),
+      "hitsBipartite" -> (() => Graph.hitsBipartite(baskets, "basket", "item", 6)),
       "eigenvectorCentrality" -> (() =>
         Graph.eigenvectorCentrality(baskets, "basket", "item", 1, 6)),
       "katzCentrality" -> (() => Graph.katzCentrality(baskets, "basket", "item", 1, 6)),
@@ -1135,6 +1133,33 @@ class GraphAnalyticsSpec extends SparkFunSuite {
     assert(got == Map(
       ("auth", "p1") -> 1000000L, ("auth", "p2") -> 600000L,
       ("hub", "s1") -> 1000000L, ("hub", "s2") -> 625000L), s"got $got")
+  }
+
+  test("Graph.hitsBipartite: 6 rounds equal a driver-side integer fold, in seconds") {
+    import spark.implicits._
+    val edges = Seq(("s1", "p1"), ("s1", "p2"), ("s2", "p1"), ("s2", "p1"))
+    // the same coupled recurrence, max-normalized at 1e6, on the driver
+    def fold(iters: Int): Map[(String, String), Long] = {
+      val es = edges.distinct
+      def norm(raw: Map[String, Long]) = raw.map { case (k, v) => k -> v * 1000000L / raw.values.max }
+      val init = (es.map(_._1).map(_ -> 1000000L).toMap, Map.empty[String, Long])
+      val (hub, auth) = (1 to iters).foldLeft(init) { case ((h, _), _) =>
+        val a = norm(es.groupBy(_._2).map { case (v, in) => v -> in.map(e => h(e._1)).sum })
+        (norm(es.groupBy(_._1).map { case (u, out) => u -> out.map(e => a(e._2)).sum }), a)
+      }
+      auth.map { case (k, v) => ("auth", k) -> v } ++ hub.map { case (k, v) => ("hub", k) -> v }
+    }
+    // the fold replays the hand-run 2-round figures
+    assert(fold(2) == Map(("auth", "p1") -> 1000000L, ("auth", "p2") -> 600000L,
+      ("hub", "s1") -> 1000000L, ("hub", "s2") -> 625000L))
+    // the uncut 6-round plan held 4^6 copies of the first hub frame and
+    // exhausted a 4 GB heap at 4 rounds already
+    val t0 = System.nanoTime()
+    val got = Graph.hitsBipartite(edges.toDF("sup", "part"), "sup", "part", iters = 6)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("score_fx")).toMap
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(got == fold(6), s"got $got")
+    assert(secs < 60, f"6 rounds took $secs%.1f s")
   }
 
   test("Graph.eigenvectorCentrality: path graph replay; isolated dst pins 0") {

@@ -1,6 +1,6 @@
 package graft
 
-/** Suite-wired twin of the `runMain graft.PlanScan` sweep: every
+/** Suite-wired twin of the `runMain graft.Dev scan` sweep: every
   * `SparkEntry.queries` optimized logical plan at sf0.001 must contain
   * ZERO unbounded single-partition windows (empty or all-foldable
   * partition spec outside the bounded `__pid`/`__sb` allowlist). The

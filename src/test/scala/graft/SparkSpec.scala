@@ -6,14 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps the
   * suite fast; tests only read /root/testdata and temp dirs). */
 object SparkSpec {
+  // 4 cpus whatever SPARK_GRAFT_CPUS says: spec figures assume 4
+  // shuffle partitions
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
