@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.Semaphore
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -8,7 +11,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * `SparkEntry.select`: none selects every query, each name selects
   * the queries it is a prefix of.
   *
-  *   time <sfDir> [name...]            build and action seconds per query
+  *   time <sfDir> [name...]            build and action seconds and Spark
+  *                                     jobs per query
   *   explain <sfDir> [name...]         formatted physical plan
   *   audit <sfDir> <outCsv> [name...]  plan-shape census, one CSV row per query
   *   scan <sfDir> [name...]            unbounded single-partition windows;
@@ -18,6 +22,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * forced confs (-Dspark.graft.*, -Dspark.sql.*), not for pin numbers.
   * Build seconds are the eager work a query does while its frame is
   * built (gates, checkpointed loops); action seconds are the noop write.
+  * Jobs are every Spark job the query starts, build and action.
   */
 object Dev {
   private type Query = (SparkSession, String) => DataFrame
@@ -44,17 +49,47 @@ object Dev {
     try body(spark, selected) finally spark.stop()
   }
 
-  private def time(spark: SparkSession, sfDir: String, qs: Seq[(String, Query)]): Unit =
-    for ((name, fn) <- qs) {
+  private def time(spark: SparkSession, sfDir: String, qs: Seq[(String, Query)]): Unit = {
+    val jobs = new JobCounter(spark)
+    try for ((name, fn) <- qs) {
+      val j0 = jobs.settled()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
-      println(f"[time] $name: build ${(t1 - t0) / 1e9}%.2f s, action ${(t2 - t1) / 1e9}%.2f s")
+      val n = jobs.settled() - j0
+      println(f"[time] $name: build ${(t1 - t0) / 1e9}%.2f s, " +
+        f"action ${(t2 - t1) / 1e9}%.2f s, jobs $n")
       spark.catalog.clearCache()
       System.gc()
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
+  /** Counts the Spark jobs started on `spark` (an onJobStart counter).
+    * Listener events arrive asynchronously, so `settled` first runs a
+    * one-task marker job and waits for its start event: the bus
+    * delivers events in order, so every job started before the marker
+    * has been counted by then. Marker jobs are not counted. */
+  private final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val Marker = "graft.dev.marker"
+    private val started = new AtomicInteger
+    private val markers = new Semaphore(0)
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null && e.properties.getProperty(Marker) != null) markers.release()
+      else started.incrementAndGet()
+
+    def settled(): Int = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(Marker, "1")
+      try sc.parallelize(Seq(0), 1).foreach(_ => ())
+      finally sc.setLocalProperty(Marker, null)
+      markers.acquire()
+      started.get
     }
+  }
 
   /** Occurrences of `token` in `s`. */
   private def count(s: String, token: String): Int =

@@ -5614,9 +5614,11 @@ object SparkEntry {
         |  CAST(SUM(CAST(t AS DECIMAL(38,0))*CAST(t AS DECIMAL(38,0))*CAST(t AS DECIMAL(38,0))
         |    - CAST(t AS DECIMAL(38,0))) AS DOUBLE) AS ties,
         |  CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM c)
-        |SELECT na AS n_a, nb AS n_b,
-        | floor((r2s/2 - CAST(na AS DOUBLE)*(CAST(na AS DOUBLE)+1)/2)*10000.0 + 0.5)/10000.0 AS u_stat,
-        | CASE WHEN sqrt(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)/12 *
+        |SELECT COALESCE(na, 0) AS n_a, COALESCE(nb, 0) AS n_b,
+        | CASE WHEN na > 0 AND nb > 0 THEN
+        |   floor((r2s/2 - CAST(na AS DOUBLE)*(CAST(na AS DOUBLE)+1)/2)*10000.0 + 0.5)/10000.0
+        | END AS u_stat,
+        | CASE WHEN na > 0 AND nb > 0 AND sqrt(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)/12 *
         |     ((CAST(na AS DOUBLE)+CAST(nb AS DOUBLE)+1)
         |      - ties/((CAST(na AS DOUBLE)+CAST(nb AS DOUBLE))*(CAST(na AS DOUBLE)+CAST(nb AS DOUBLE)-1)))) > 0
         |   THEN floor(((r2s/2 - CAST(na AS DOUBLE)*(CAST(na AS DOUBLE)+1)/2)
@@ -5669,13 +5671,16 @@ object SparkEntry {
         |c AS (SELECT v,
         |  SUM(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cuma,
         |  SUM(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cumb FROM m),
-        |t AS (SELECT (SELECT SUM(ca) FROM m) AS na, (SELECT SUM(cb) FROM m) AS nb),
-        |g AS (SELECT c.v, abs(c.cuma*t.nb - c.cumb*t.na) AS gap, t.na, t.nb FROM c, t),
+        |t AS (SELECT COALESCE((SELECT SUM(ca) FROM m), 0) AS na,
+        |  COALESCE((SELECT SUM(cb) FROM m), 0) AS nb),
+        |g AS (SELECT c.v, abs(c.cuma*t.nb - c.cumb*t.na) AS gap FROM c, t),
         |best AS (SELECT * FROM g ORDER BY gap DESC, v ASC LIMIT 1)
         |SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        | floor((CAST(gap AS DOUBLE)/CAST(na*nb AS DOUBLE))*1000000.0 + 0.5)/1000000.0 AS ks_stat,
-        | floor(v*10000.0 + 0.5)/10000.0 AS ks_at
-        |FROM best""".stripMargin,
+        | CASE WHEN na > 0 AND nb > 0 THEN
+        |   floor((CAST(gap AS DOUBLE)/CAST(na*nb AS DOUBLE))*1000000.0 + 0.5)/1000000.0
+        | END AS ks_stat,
+        | CASE WHEN na > 0 AND nb > 0 THEN floor(v*10000.0 + 0.5)/10000.0 END AS ks_at
+        |FROM t LEFT JOIN best ON TRUE""".stripMargin,
 
     "q104_dense_ids" ->
       """SELECT c_custkey, c_acctbal,
@@ -6829,16 +6834,20 @@ object SparkEntry {
         |f AS (SELECT na, nb,
         |  r2s - CAST(na AS HUGEINT)*(CAST(na AS HUGEINT)+1) AS twou FROM s),
         |g AS (SELECT na, nb,
-        |  floor(CAST(twou - CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)
-        |    /CAST(CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)*1000000.0 + 0.5)/1000000.0 AS delta,
-        |  floor(CAST(twou AS DOUBLE)
-        |    /CAST(CAST(2 AS HUGEINT)*CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)*1000000.0 + 0.5)/1000000.0 AS auc
+        |  CASE WHEN na > 0 AND nb > 0 THEN
+        |    floor(CAST(twou - CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)
+        |      /CAST(CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)*1000000.0 + 0.5)/1000000.0
+        |  END AS delta,
+        |  CASE WHEN na > 0 AND nb > 0 THEN
+        |    floor(CAST(twou AS DOUBLE)
+        |      /CAST(CAST(2 AS HUGEINT)*CAST(na AS HUGEINT)*CAST(nb AS HUGEINT) AS DOUBLE)*1000000.0 + 0.5)/1000000.0
+        |  END AS auc
         |  FROM f)
-        |SELECT na AS n_a, nb AS n_b, delta, auc,
+        |SELECT COALESCE(na, 0) AS n_a, COALESCE(nb, 0) AS n_b, delta, auc,
         |  CASE WHEN abs(delta) < 0.147 THEN 'negligible'
         |       WHEN abs(delta) < 0.33 THEN 'small'
         |       WHEN abs(delta) < 0.474 THEN 'medium'
-        |       ELSE 'large' END AS magnitude
+        |       WHEN delta IS NOT NULL THEN 'large' END AS magnitude
         |FROM g""".stripMargin,
 
     // Hill: identical counts, top-(k+1) count multiset (tie-safe by
@@ -8864,7 +8873,8 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN t = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
         |  CAST(SUM(CASE WHEN t = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
         |  FROM m GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM dom),
+        |tot AS (SELECT CAST(COALESCE(SUM(ca), 0) AS BIGINT) AS na,
+        |  CAST(COALESCE(SUM(cb), 0) AS BIGINT) AS nb FROM dom),
         |st AS (SELECT v4,
         |  CAST(SUM(ca) OVER w AS BIGINT) AS cum_a,
         |  CAST(SUM(cb) OVER w AS BIGINT) AS cum_b,
@@ -8874,7 +8884,7 @@ object SparkEntry {
         |  FROM st CROSS JOIN tot WHERE gap4 IS NOT NULL)
         |SELECT na AS n_a, nb AS n_b,
         |  CASE WHEN na > 0 AND nb > 0 THEN
-        |    floor(CAST(sm AS DOUBLE)/(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)*1e4)*1000000.0 + 0.5)/1000000.0
+        |    floor(CAST(COALESCE(sm, 0) AS DOUBLE)/(CAST(na AS DOUBLE)*CAST(nb AS DOUBLE)*1e4)*1000000.0 + 0.5)/1000000.0
         |  END AS w1
         |FROM tot CROSS JOIN s""".stripMargin,
 
@@ -10652,7 +10662,8 @@ object SparkEntry {
         |cb AS (SELECT v, CAST(COUNT(*) AS BIGINT) c FROM b GROUP BY 1),
         |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca.c, 0) AS cca,
         |  COALESCE(cb.c, 0) AS ccb FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |t AS (SELECT CAST(SUM(cca) AS BIGINT) AS mm, CAST(SUM(ccb) AS BIGINT) AS nn FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(cca), 0) AS BIGINT) AS mm,
+        |  CAST(COALESCE(SUM(ccb), 0) AS BIGINT) AS nn FROM m),
         |sc AS (SELECT cca, cca + ccb AS tt,
         |  least((SUM(cca + ccb) OVER (ORDER BY v) - (cca + ccb)) * 2 + (cca + ccb) + 1,
         |        (mm + nn + 1) * 2
@@ -10662,9 +10673,12 @@ object SparkEntry {
         |  SUM(CAST(tt AS DECIMAL(38,0)) * s2) AS ss2,
         |  SUM(CAST(tt AS DECIMAL(38,0)) * s2 * s2) AS ss4 FROM sc)
         |SELECT mm AS n_a, nn AS n_b,
-        |  floor(CAST(ab2 AS DOUBLE) / 2 * 10000.0 + 0.5) / 10000.0 AS ab_stat,
-        |  floor(CAST(mm AS DOUBLE) * CAST(ss2 AS DOUBLE)
-        |    / (CAST(mm AS DOUBLE) + CAST(nn AS DOUBLE)) / 2 * 10000.0 + 0.5) / 10000.0 AS ab_mean,
+        |  CASE WHEN mm > 0 AND nn > 0 THEN
+        |    floor(CAST(ab2 AS DOUBLE) / 2 * 10000.0 + 0.5) / 10000.0 END AS ab_stat,
+        |  CASE WHEN mm > 0 AND nn > 0 THEN
+        |    floor(CAST(mm AS DOUBLE) * CAST(ss2 AS DOUBLE)
+        |      / (CAST(mm AS DOUBLE) + CAST(nn AS DOUBLE)) / 2 * 10000.0 + 0.5) / 10000.0
+        |  END AS ab_mean,
         |  CASE WHEN mm > 0 AND nn > 0 AND
         |    CAST(mm AS DOUBLE) * CAST(nn AS DOUBLE)
         |      * CAST(CAST(mm + nn AS DECIMAL(38,0)) * ss4 - ss2 * ss2 AS DOUBLE)
@@ -10760,8 +10774,8 @@ object SparkEntry {
         |cb AS (SELECT v, CAST(COUNT(*) AS BIGINT) c FROM b GROUP BY 1),
         |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca.c, 0) AS cca,
         |  COALESCE(cb.c, 0) AS ccb FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |t AS (SELECT CAST(SUM(cca) AS BIGINT) AS mm, CAST(SUM(ccb) AS BIGINT) AS nn,
-        |  CAST(COUNT(*) AS BIGINT) AS nv FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(cca), 0) AS BIGINT) AS mm,
+        |  CAST(COALESCE(SUM(ccb), 0) AS BIGINT) AS nn, CAST(COUNT(*) AS BIGINT) AS nv FROM m),
         |pre AS (SELECT cca + ccb AS tt,
         |  SUM(cca) OVER (ORDER BY v) AS cuma, SUM(ccb) OVER (ORDER BY v) AS cumb
         |  FROM m),
@@ -10790,7 +10804,8 @@ object SparkEntry {
         |cb AS (SELECT v, CAST(COUNT(*) AS BIGINT) c FROM b GROUP BY 1),
         |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca.c, 0) AS cca,
         |  COALESCE(cb.c, 0) AS ccb FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |t AS (SELECT CAST(SUM(cca) AS BIGINT) AS mm, CAST(SUM(ccb) AS BIGINT) AS nn FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(cca), 0) AS BIGINT) AS mm,
+        |  CAST(COALESCE(SUM(ccb), 0) AS BIGINT) AS nn FROM m),
         |pre AS (SELECT cca, ccb, cca + ccb AS tt,
         |  SUM(cca) OVER (ORDER BY v) AS cuma, SUM(ccb) OVER (ORDER BY v) AS cumb,
         |  SUM(cca + ccb) OVER (ORDER BY v) AS cumt FROM m),
@@ -10819,8 +10834,10 @@ object SparkEntry {
         |h AS (SELECT mm, nn, r1, r2,
         |  CAST(mm AS DOUBLE) * s1 AS v1, CAST(nn AS DOUBLE) * s2v AS v2 FROM g)
         |SELECT mm AS n_a, nn AS n_b,
-        |  floor((r2 - (CAST(nn AS DOUBLE) + 1) / 2) / CAST(mm AS DOUBLE)
-        |    * 1000000.0 + 0.5) / 1000000.0 AS p_hat,
+        |  CASE WHEN mm > 0 AND nn > 0 THEN
+        |    floor((r2 - (CAST(nn AS DOUBLE) + 1) / 2) / CAST(mm AS DOUBLE)
+        |      * 1000000.0 + 0.5) / 1000000.0
+        |  END AS p_hat,
         |  CASE WHEN mm > 1 AND nn > 1 AND (v1 + v2) > 0 THEN
         |    floor(CAST(mm AS DOUBLE) * CAST(nn AS DOUBLE) * (r2 - r1)
         |      / ((CAST(mm AS DOUBLE) + CAST(nn AS DOUBLE)) * sqrt(v1 + v2))
@@ -10935,8 +10952,8 @@ object SparkEntry {
         |cb AS (SELECT v, CAST(COUNT(*) AS BIGINT) c FROM b GROUP BY 1),
         |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca.c, 0) AS cca,
         |  COALESCE(cb.c, 0) AS ccb FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |t AS (SELECT CAST(SUM(cca) AS BIGINT) AS mm, CAST(SUM(ccb) AS BIGINT) AS nn,
-        |  CAST(COUNT(*) AS BIGINT) AS nv FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(cca), 0) AS BIGINT) AS mm,
+        |  CAST(COALESCE(SUM(ccb), 0) AS BIGINT) AS nn, CAST(COUNT(*) AS BIGINT) AS nv FROM m),
         |pre AS (SELECT cca, ccb, cca + ccb AS tt,
         |  SUM(cca) OVER (ORDER BY v) AS cuma, SUM(ccb) OVER (ORDER BY v) AS cumb,
         |  SUM(cca + ccb) OVER (ORDER BY v) AS cumt FROM m),
@@ -10949,7 +10966,7 @@ object SparkEntry {
         |  bn*ma2 - b2*CAST(mm AS DECIMAL(38,0)) AS gapa,
         |  bn*mb2 - b2*CAST(nn AS DECIMAL(38,0)) AS gapb,
         |  b2*(bn*2 - b2) - bn*tt AS den4 FROM g),
-        |terms AS (SELECT CASE WHEN den4 > 0 THEN CAST(floor(
+        |terms AS (SELECT CASE WHEN mm > 0 AND nn > 0 AND den4 > 0 THEN CAST(floor(
         |  (CAST(tt AS DOUBLE)*CAST(gapa AS DOUBLE)/CAST(den4 AS DOUBLE)
         |     *CAST(gapa AS DOUBLE)/CAST(mm + nn AS DOUBLE)/CAST(mm AS DOUBLE)
         |   + CAST(tt AS DOUBLE)*CAST(gapb AS DOUBLE)/CAST(den4 AS DOUBLE)
@@ -11704,7 +11721,8 @@ object SparkEntry {
         |cb AS (SELECT v, CAST(COUNT(*) AS BIGINT) c FROM b GROUP BY 1),
         |m AS (SELECT COALESCE(ca.v, cb.v) AS v, COALESCE(ca.c, 0) AS cca,
         |  COALESCE(cb.c, 0) AS ccb FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-        |t AS (SELECT CAST(SUM(cca) AS BIGINT) AS mm, CAST(SUM(ccb) AS BIGINT) AS nn FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(cca), 0) AS BIGINT) AS mm,
+        |  CAST(COALESCE(SUM(ccb), 0) AS BIGINT) AS nn FROM m),
         |pre AS (SELECT v, cca, ccb,
         |  SUM(cca) OVER (ORDER BY v) AS pca, SUM(ccb) OVER (ORDER BY v) AS pcb,
         |  SUM(CAST(v AS HUGEINT)*cca) OVER (ORDER BY v) AS psa,
@@ -12450,7 +12468,8 @@ object SparkEntry {
         |  WHERE event_type = 'signup' AND value IS NOT NULL GROUP BY 1),
         |m AS (SELECT COALESCE(a.v, b.v) AS v, COALESCE(ca, 0) AS ca,
         |  COALESCE(cb, 0) AS cb FROM a FULL OUTER JOIN b ON a.v = b.v),
-        |t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM m),
+        |t AS (SELECT CAST(COALESCE(SUM(ca), 0) AS BIGINT) AS na,
+        |  CAST(COALESCE(SUM(cb), 0) AS BIGINT) AS nb FROM m),
         |c AS (SELECT CAST(SUM(ca) OVER w AS BIGINT) AS cuma,
         |  CAST(SUM(cb) OVER w AS BIGINT) AS cumb FROM m
         |  WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => sf}
 import graft.sources.Tables
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Data-quality checks (reference etl.py:490-594) as *queries* returning
   * DataFrames rather than driver-side booleans — composable, and the
@@ -283,7 +284,6 @@ object QualityChecks {
                  sensitive: Column, t: Double): DataFrame = {
     require(quasiCols.nonEmpty && t > 0 && t < 1,
       "need quasi columns and t in (0, 1)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     // COMPLETE-CASE semantics, made explicit (r9 ADVICE): a row whose
     // sensitive value is NULL carries no distribution information, so
     // it is excluded from classes AND margins up front — otherwise the
@@ -420,6 +420,26 @@ object QualityChecks {
       .orderBy("bin_idx")
   }
 
+  /** The merged value domain of two samples, `(__v, __ca, __cb)`: one
+    * row per distinct non-null `value` of either sample with its count
+    * in each (0 where a sample lacks it). The two-sample tests below
+    * all start here and keep only their own statistic.
+    *
+    * Scale shape: one tagged union of the two samples, spread once
+    * ([[graft.operators.Par.spread]]), and ONE map-side-combinable
+    * `groupBy(__v)` with conditional counts: a single shuffle bounded
+    * by the value DOMAIN, not two per-side collapses merged by a
+    * full-outer join. An empty or all-null sample is an all-zero count
+    * column; two of them are an empty domain. */
+  private def valueDomain(dfA: DataFrame, dfB: DataFrame, value: Column): DataFrame = {
+    def tagged(df: DataFrame, a: Boolean) = df.select(value.as("__v"), sf.lit(a).as("__a"))
+    graft.operators.Par.spread(tagged(dfA, a = true).unionAll(tagged(dfB, a = false)))
+      .filter(sf.col("__v").isNotNull)
+      .groupBy("__v")
+      .agg(sf.count(sf.when(sf.col("__a"), 1)).as("__ca"),
+        sf.count(sf.when(!sf.col("__a"), 1)).as("__cb"))
+  }
+
   /** Exact two-sample Kolmogorov-Smirnov statistic: the largest gap
     * between the two samples' empirical CDFs — the UNBINNED
     * distribution-drift test ([[psiDrift]] is its binned, smoothed
@@ -436,43 +456,39 @@ object QualityChecks {
     * handled correctly by evaluating the gap only at (sorted) distinct
     * observed values. `ks_at` reports the smallest value attaining the
     * max (the argmax tie-break), locating WHERE the distributions
-    * diverge.
+    * diverge. An empty side gives n = 0 and NULL statistics.
     *
-    * Scale shape: the quantileProfile convention — both samples
-    * compress map-side to distinct (value, side) counts, one
-    * running-frame cumulative window over the value DOMAIN ranks them
-    * (keyed by a non-foldable constant; bounded by the domain, not the
-    * row count), and a single-row max finishes. The integer gap
-    * ca·n_b − cb·n_a stays exact while n_a·n_b < 2^63 (~3·10^9 rows
-    * per side); beyond that, lift the gap into DECIMAL. */
+    * Scale shape: the [[valueDomain]] collapse, one running-frame
+    * cumulative window over the value DOMAIN (keyed by a non-foldable
+    * constant; bounded by the domain, not the row count), and a
+    * single-row max. The integer gap ca·n_b − cb·n_a stays exact while
+    * n_a·n_b < 2^63 (~3·10^9 rows per side); beyond that, lift the gap
+    * into DECIMAL. */
   def ksTest(dfA: DataFrame, dfB: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def side(df: DataFrame, tag: String) =
-      graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-        .filter(sf.col("__v").isNotNull)
-        .groupBy("__v")
-        .agg(sf.count(sf.lit(1)).as(s"__c$tag"))
-    val merged = side(dfA, "a").join(side(dfB, "b"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val merged = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .localCheckpoint(true) // read by the window and the totals
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1)))
       .orderBy("__v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = merged.agg(sf.sum("__ca").as("__na"), sf.sum("__cb").as("__nb"))
     merged
-      .withColumn("__cuma", sf.sum("__ca").over(w))
-      .withColumn("__cumb", sf.sum("__cb").over(w))
+      // one select: window columns added by separate withColumns each get
+      // their own extracted partition key, so each would re-sort the domain
+      .select(sf.col("*"),
+        sf.sum("__ca").over(w).as("__cuma"), sf.sum("__cb").over(w).as("__cumb"))
       .crossJoin(sf.broadcast(totals))
       .withColumn("__gap",
         sf.abs(sf.col("__cuma") * sf.col("__nb") - sf.col("__cumb") * sf.col("__na")))
       .agg(sf.max(sf.struct(sf.col("__gap"), (-sf.col("__v")).as("__nv"),
           sf.col("__na"), sf.col("__nb"))).as("__m"))
-      .select(sf.col("__m.__na").as("n_a"), sf.col("__m.__nb").as("n_b"),
-        gf.roundAt(sf.col("__m.__gap").cast("double") /
-          (sf.col("__m.__na") * sf.col("__m.__nb")).cast("double"), 6).as("ks_stat"),
-        gf.roundAt(-sf.col("__m.__nv"), 4).as("ks_at"))
+      .select({
+        val ok = sf.col("__m.__na") > 0 && sf.col("__m.__nb") > 0
+        Seq(sf.coalesce(sf.col("__m.__na"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__m.__nb"), sf.lit(0L)).as("n_b"),
+          sf.when(ok, gf.roundAt(sf.col("__m.__gap").cast("double") /
+            (sf.col("__m.__na") * sf.col("__m.__nb")).cast("double"), 6)).as("ks_stat"),
+          sf.when(ok, gf.roundAt(-sf.col("__m.__nv"), 4)).as("ks_at"))
+      }: _*)
   }
 
   /** Peaks-over-threshold tail fit per group — generalized Pareto
@@ -504,7 +520,6 @@ object QualityChecks {
               tailQ: Double = 0.95): DataFrame = {
     require(tailQ > 0.5 && tailQ < 1.0, s"tailQ must be in (0.5, 1), got $tailQ")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val tq4 = math.floor(tailQ * 1e4 + 0.5).toLong
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val dom = df.filter(sf.col(valueCol).isNotNull && sf.col(groupCol).isNotNull)
@@ -575,7 +590,6 @@ object QualityChecks {
                 trim: Double = 0.2): DataFrame = {
     require(trim > 0 && trim < 0.5, s"trim must be in (0, 0.5), got $trim")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val tr4 = math.floor(trim * 1e4 + 0.5).toLong
     def side(df: DataFrame, tag: String) = {
       val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
@@ -705,27 +719,18 @@ object QualityChecks {
     * Σ_v ca·(2·cumBefore + ca + cb + 1) — so U accumulates in exact
     * integer arithmetic (DECIMAL against overflow) and only the final
     * z assembly runs in (pinned-order) doubles. Any engine replays it.
+    * An empty side gives n = 0 and NULL statistics.
     *
-    * Scale shape: the ksTest plan — per-side distinct-value
-    * compression, one domain-bounded cumulative window, a single-row
-    * finish. */
+    * Scale shape: the [[valueDomain]] collapse, one domain-bounded
+    * cumulative window (constant key, the [[ksTest]] window), a
+    * single-row finish. */
   def mannWhitneyU(dfA: DataFrame, dfB: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def side(df: DataFrame, tag: String) =
-      graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-        .filter(sf.col("__v").isNotNull)
-        .groupBy("__v")
-        .agg(sf.count(sf.lit(1)).as(s"__c$tag"))
-    val merged = side(dfA, "a").join(side(dfB, "b"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val merged = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .localCheckpoint(true)
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1)))
       .orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
     val t = sf.col("__ca") + sf.col("__cb")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cumBefore = sf.coalesce(sf.sum(t).over(w), sf.lit(0L))
     merged
       .withColumn("__r2", dec(sf.col("__ca")) *
@@ -742,9 +747,11 @@ object QualityChecks {
         val mu = na * nb / 2
         val sigma = sf.sqrt(na * nb / 12 *
           ((n + 1) - sf.col("__ties").cast("double") / (n * (n - 1))))
-        Seq(sf.col("__na").as("n_a"), sf.col("__nb").as("n_b"),
-          gf.roundAt(u, 4).as("u_stat"),
-          sf.when(sigma > 0, gf.roundAt((u - mu) / sigma, 4)).as("z"))
+        val ok = sf.col("__na") > 0 && sf.col("__nb") > 0
+        Seq(sf.coalesce(sf.col("__na"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__nb"), sf.lit(0L)).as("n_b"),
+          sf.when(ok, gf.roundAt(u, 4)).as("u_stat"),
+          sf.when(ok && sigma > 0, gf.roundAt((u - mu) / sigma, 4)).as("z"))
       }: _*)
   }
 
@@ -761,27 +768,18 @@ object QualityChecks {
     * δ = (2U − n_a·n_b)/(n_a·n_b) and A = 2U/(2·n_a·n_b) are single
     * pinned double divisions of exact decimal(38) integers, rounded
     * 1e-6; the magnitude band buckets the ROUNDED δ (so the label can
-    * never disagree with the printed number).
+    * never disagree with the printed number). An empty side gives
+    * n = 0 and NULL statistics and label.
     *
-    * Scale shape: identical to [[mannWhitneyU]] — per-side
-    * distinct-value compression, one domain-bounded cumulative
-    * window, a single-row finish. */
+    * Scale shape: the [[valueDomain]] collapse, one domain-bounded
+    * cumulative window (constant key, the [[ksTest]] window), a
+    * single-row finish. */
   def cliffsDelta(dfA: DataFrame, dfB: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def side(df: DataFrame, tag: String) =
-      graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-        .filter(sf.col("__v").isNotNull)
-        .groupBy("__v")
-        .agg(sf.count(sf.lit(1)).as(s"__c$tag"))
-    val merged = side(dfA, "a").join(side(dfB, "b"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val merged = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1)))
       .orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
     val t = sf.col("__ca") + sf.col("__cb")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cumBefore = sf.coalesce(sf.sum(t).over(w), sf.lit(0L))
     merged
       .withColumn("__r2", dec(sf.col("__ca")) * dec(cumBefore * 2 + t + 1))
@@ -792,16 +790,17 @@ object QualityChecks {
         val nb = dec(sf.col("__nb"))
         val twoU = sf.col("__r2s") - na * (na + 1)
         val delta = (twoU - na * nb).cast("double") / (na * nb).cast("double")
-        val deltaR = gf.roundAt(delta, 6)
+        val ok = sf.col("__na") > 0 && sf.col("__nb") > 0
+        val deltaR = sf.when(ok, gf.roundAt(delta, 6))
         val auc = twoU.cast("double") / (dec(sf.lit(2L)) * na * nb).cast("double")
-        Seq(sf.col("__na").cast("long").as("n_a"),
-          sf.col("__nb").cast("long").as("n_b"),
+        Seq(sf.coalesce(sf.col("__na"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__nb"), sf.lit(0L)).as("n_b"),
           deltaR.as("delta"),
-          gf.roundAt(auc, 6).as("auc"),
+          sf.when(ok, gf.roundAt(auc, 6)).as("auc"),
           sf.when(sf.abs(deltaR) < 0.147, "negligible")
             .when(sf.abs(deltaR) < 0.33, "small")
             .when(sf.abs(deltaR) < 0.474, "medium")
-            .otherwise("large").as("magnitude"))
+            .when(ok, "large").as("magnitude"))
       }: _*)
   }
 
@@ -909,7 +908,6 @@ object QualityChecks {
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1)))
       .orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
     val t = sf.col("__ca") + sf.col("__cb")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cumBefore = sf.coalesce(sf.sum(t).over(w), sf.lit(0L))
     merged
       .withColumn("__r2", dec(sf.col("__ca")) * dec(cumBefore * 2 + t + 1))
@@ -1104,42 +1102,34 @@ object QualityChecks {
     * products (pair counts square the corpus); the lower weighted
     * median (smallest d with 2·cumW ≥ totW — the [[weightedQuantile]]
     * convention) is exact integer arithmetic end-to-end — nothing to
-    * round.
+    * round. An empty side gives n = 0 and a NULL shift.
     *
-    * Scale shape: two map-side-combinable value collapses, a
-    * domain×domain broadcast pairing, ONE difference-domain rollup
-    * (combinable), and a cumulative pass over the difference domain
-    * riding [[graft.operators.StarSchema.globalPrefixSums]] (range
-    * partition + broadcast offsets) — even a near-continuous value
-    * column whose difference domain approaches row counts sorts in
-    * parallel, never on one task. Sample sizes fold into the frame as
-    * weight sums over the already-collapsed domains (no driver-side
-    * count() actions). */
+    * Scale shape: the [[valueDomain]] collapse (cast to long; each
+    * side is a filter of it), a domain×domain broadcast pairing, ONE
+    * difference-domain rollup (combinable), and a cumulative pass over
+    * the difference domain riding
+    * [[graft.operators.StarSchema.globalPrefixSums]] (range partition
+    * + broadcast offsets) — even a near-continuous value column whose
+    * difference domain approaches row counts sorts in parallel, never
+    * on one task. Sample sizes are count sums over the collapsed
+    * domain (no driver-side count() actions). */
   def hodgesLehmann(dfA: DataFrame, dfB: DataFrame,
                     valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    // BOTH value domains in one tagged collapse: a single combinable
-    // aggregation job (and one checkpoint, not two) covers the two
-    // samples — each side then feeds the pairing and its size sum.
-    def tag(df: DataFrame, a: Boolean) = df
-      .select(sf.lit(a).as("__a"), sf.col(valueCol).cast("long").as("__v"))
-      .filter(sf.col("__v").isNotNull)
-    val both = tag(dfA, a = true).unionAll(tag(dfB, a = false))
-      .groupBy("__a", "__v").agg(sf.count(sf.lit(1)).as("__c"))
-      .localCheckpoint(true)
-    val da = both.filter(sf.col("__a"))
-      .select(sf.col("__v").as("__va"), sf.col("__c").as("__ca"))
-    val db = both.filter(!sf.col("__a"))
-      .select(sf.col("__v").as("__vb"), sf.col("__c").as("__cb"))
+    val both = valueDomain(dfA, dfB, sf.col(valueCol).cast("long"))
+      .localCheckpoint(true) // both sides, the pairing and the sizes read it
+    val da = both.filter(sf.col("__ca") > 0)
+      .select(sf.col("__v").as("__va"), sf.col("__ca"))
+    val db = both.filter(sf.col("__cb") > 0)
+      .select(sf.col("__v").as("__vb"), sf.col("__cb"))
     // read ONCE (by the prefix pass) — no checkpoint: the pair-weight
     // total needs no second scan of diffs because Σ__w = Σc_a·Σc_b =
     // n_a·n_b exactly (every (a,b) value pair contributes c_a·c_b once)
     val diffs = da.crossJoin(sf.broadcast(db))
       .groupBy((sf.col("__va") - sf.col("__vb")).as("__d"))
       .agg(sf.sum(dec(sf.col("__ca")) * dec(sf.col("__cb"))).as("__w"))
-    val na = da.agg(sf.sum("__ca").as("n_a"))
-    val nb = db.agg(sf.sum("__cb").as("n_b"))
-    val sizes = na.crossJoin(nb)
+    val sizes = both.agg(
+        sf.coalesce(sf.sum("__ca"), sf.lit(0L)).as("n_a"),
+        sf.coalesce(sf.sum("__cb"), sf.lit(0L)).as("n_b"))
       .withColumn("__tot", dec(sf.col("n_a")) * dec(sf.col("n_b")))
     val med = graft.operators.StarSchema
       .globalPrefixSums(diffs, Seq("__d"), "__w", "__cum")
@@ -1279,7 +1269,7 @@ object QualityChecks {
   }
 
   /** All-pairs Welch contrasts between group means — the "WHICH groups
-    * differ" readout a significant [[anova]]/[[kruskalWallis]] omnibus
+    * differ" readout a significant [[anovaF]]/[[kruskalWallis]] omnibus
     * demands next: for every group pair, Δ = m_a − m_b, the unpooled
     * SE = √(s²_a/n_a + s²_b/n_b), t = Δ/SE, and the Welch–
     * Satterthwaite df — feed the t's to [[fdrProportionTests]]-style
@@ -1297,7 +1287,6 @@ object QualityChecks {
     * rows, data-size-independent. */
   def pairwiseContrasts(df: DataFrame, groupCol: String,
                         valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val gstats = df
       .filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
@@ -1429,7 +1418,6 @@ object QualityChecks {
     * cell domain; margins re-aggregate the CELL table; everything
     * after is cell-domain-sized with single-row broadcasts. */
   def cohensKappa(df: DataFrame, colA: String, colB: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = graft.operators.Par.spread(
       df.select(sf.col(colA).cast("string").as("__a"),
         sf.col(colB).cast("string").as("__b")))
@@ -1474,7 +1462,6 @@ object QualityChecks {
     * corpus-sized); the two margin joins are AQE-decided equi joins;
     * single-row finish. NULL in either column drops the row. */
   def mutualInformation(df: DataFrame, colX: String, colY: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def lnFx(c: Column) = sf.floor(sf.log(c) * 1e6 + 0.5).cast("long")
     val cells = graft.operators.Par.spread(
       df.select(sf.col(colX).cast("string").as("__x"),
@@ -1538,7 +1525,6 @@ object QualityChecks {
     // cumulative Poisson(1) CDF scaled to 2^32 — literals shared with
     // the oracle builder via poissonThresholds
     val ts = poissonThresholds
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(sf.col(keyCol).as("__k"),
       sf.col(idCol).cast("long").as("__id"),
       sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).as("__vfx"))
@@ -1717,7 +1703,6 @@ object QualityChecks {
            yScale: Int = 2, x1Scale: Int = 0, x2Scale: Int = 2): DataFrame = {
     def fx(c: String, s: Int) =
       sf.floor(sf.col(c).cast("double") * sf.lit(math.pow(10, s)) + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val rows = graft.operators.Par.spread(df
       .filter(sf.col(yCol).isNotNull && sf.col(x1Col).isNotNull &&
         sf.col(x2Col).isNotNull)
@@ -2107,23 +2092,15 @@ object QualityChecks {
     * Determinism: with cumA/cumB/t exact integers, each grid term is
     * the exact integer (cumA·n − cumB·m)² · t_v accumulating in
     * DECIMAL(38,0) and T is ONE pinned double division by m·n·N²,
-    * rounded 1e-6. Empty sides yield NULL.
+    * rounded 1e-6. An empty side gives n = 0 and a NULL statistic.
     *
-    * Scale shape: the [[mannWhitney]] value-domain collapse + ONE
+    * Scale shape: the [[valueDomain]] collapse + ONE
     * range-partitioned multi-column prefix pass
     * ([[graft.operators.StarSchema.globalPrefixSumsMulti]] — the
     * row-340 rule) + a single-row reduce. */
   def cramerVonMises(dfA: DataFrame, dfB: DataFrame,
                      valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def side(df: DataFrame, name: String) = graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-      .filter(sf.col("__v").isNotNull)
-      .groupBy("__v").agg(sf.count(sf.lit(1)).as(name))
-    val cells = side(dfA, "__ca").join(side(dfB, "__cb"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val cells = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .withColumn("__t", sf.col("__ca") + sf.col("__cb"))
       .localCheckpoint(true) // prefix + totals read it
     val tot = cells.agg(sf.sum("__ca").cast("long").as("__m"),
@@ -2144,7 +2121,8 @@ object QualityChecks {
         val mD = sf.col("__m").cast("double")
         val nD = sf.col("__n").cast("double")
         val bigN = mD + nD
-        Seq(sf.col("__m").as("n_a"), sf.col("__n").as("n_b"),
+        Seq(sf.coalesce(sf.col("__m"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__n"), sf.lit(0L)).as("n_b"),
           sf.col("n_values"),
           sf.when(sf.col("__m") > 0 && sf.col("__n") > 0, gf.roundAt(
             sf.col("__num").cast("double") / (mD * nD * bigN * bigN), 6))
@@ -2170,21 +2148,15 @@ object QualityChecks {
     * range-partitioned [[graft.operators.StarSchema.globalPrefixSumsMulti]]
     * pass (row-340 rule); every contribution is an exact
     * DECIMAL(38,0) product; the three expectations and D² are one
-    * pinned assembly rounded 1e-4 (D² 1e-6). Empty sides yield NULL.
+    * pinned assembly rounded 1e-4 (D² 1e-6). An empty side gives n = 0
+    * and NULL statistics.
     *
-    * Scale shape: the [[cramerVonMises]] value-domain collapse + the
+    * Scale shape: the [[valueDomain]] collapse (on the 1e-4 grid) + the
     * multi-column prefix pass + a single-row reduce. */
   def energyDistance(dfA: DataFrame, dfB: DataFrame,
                      valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
-    def side(df: DataFrame, name: String) = graft.operators.Par.spread(
-        df.filter(sf.col(valueCol).isNotNull).select(v4.as("__v")))
-      .groupBy("__v").agg(sf.count(sf.lit(1)).as(name))
-    val cells = side(dfA, "__ca").join(side(dfB, "__cb"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val cells = valueDomain(dfA, dfB, v4)
       .select(sf.col("__v"), sf.col("__ca"), sf.col("__cb"),
         (dec(sf.col("__v")) * dec(sf.col("__ca"))).as("__ma"),
         (dec(sf.col("__v")) * dec(sf.col("__cb"))).as("__mb"))
@@ -2213,7 +2185,8 @@ object QualityChecks {
         val exx = sf.col("__sxx").cast("double") * 2 / (m * m) / 1e4
         val eyy = sf.col("__syy").cast("double") * 2 / (n * n) / 1e4
         val ok = sf.col("__m") > 0 && sf.col("__n") > 0
-        Seq(sf.col("__m").as("n_a"), sf.col("__n").as("n_b"),
+        Seq(sf.coalesce(sf.col("__m"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__n"), sf.lit(0L)).as("n_b"),
           sf.when(ok, gf.roundAt(exy, 4)).as("e_xy"),
           sf.when(ok, gf.roundAt(exx, 4)).as("e_xx"),
           sf.when(ok, gf.roundAt(eyy, 4)).as("e_yy"),
@@ -2246,22 +2219,13 @@ object QualityChecks {
     * DECIMAL(38,12)-space before the unordered sum (the entropy-family
     * convention), and A² is one pinned assembly rounded 1e-6. The
     * degenerate all-one-value grid cell (B(N−B) = N·t/4 ⟺ t = N)
-    * yields NULL. Empty sides yield NULL.
+    * yields NULL. An empty side gives n = 0 and a NULL statistic.
     *
-    * Scale shape: identical to [[cramerVonMises]] — value-domain
-    * collapse, ONE range-partitioned multi-column prefix pass, a
-    * single-row reduce. */
+    * Scale shape: the [[valueDomain]] collapse, ONE range-partitioned
+    * multi-column prefix pass, a single-row reduce. */
   def andersonDarling(dfA: DataFrame, dfB: DataFrame,
                       valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def side(df: DataFrame, name: String) = graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-      .filter(sf.col("__v").isNotNull)
-      .groupBy("__v").agg(sf.count(sf.lit(1)).as(name))
-    val cells = side(dfA, "__ca").join(side(dfB, "__cb"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val cells = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .withColumn("__t", sf.col("__ca") + sf.col("__cb"))
       .localCheckpoint(true) // prefix + totals read it
     val tot = cells.agg(sf.sum("__ca").cast("long").as("__m"),
@@ -2287,7 +2251,7 @@ object QualityChecks {
             gap.cast("double") / bigN.cast("double") / size.cast("double")
         def snap12(c: Column) =
           sf.floor(c * 1e12 + 0.5).cast("decimal(38,0)")
-        sf.when(den4 > 0,
+        sf.when(sf.col("__m") > 0 && sf.col("__n") > 0 && den4 > 0,
           snap12(inner(gapA, sf.col("__m")) + inner(gapB, sf.col("__n"))))
           .as("__t12")
       })
@@ -2297,7 +2261,8 @@ object QualityChecks {
         val bigN = (sf.col("__m") + sf.col("__n")).cast("double")
         val ok = sf.col("__m") > 0 && sf.col("__n") > 0 &&
           sf.col("__s12").isNotNull
-        Seq(sf.col("__m").as("n_a"), sf.col("__n").as("n_b"),
+        Seq(sf.coalesce(sf.col("__m"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__n"), sf.lit(0L)).as("n_b"),
           sf.col("n_values"),
           sf.when(ok, gf.roundAt(sf.col("__s12").cast("double") / 1e12 *
             (bigN - 1) / bigN, 6)).as("ad_stat"))
@@ -2306,7 +2271,7 @@ object QualityChecks {
 
   /** Brunner–Munzel test (Brunner & Munzel 2000, Biom. J. — the
     * "generalized Wilcoxon" modern practice recommends OVER
-    * [[mannWhitney]] when spreads differ): tests the RELATIVE EFFECT
+    * [[mannWhitneyU]] when spreads differ): tests the RELATIVE EFFECT
     * p = P(X < Y) + ½P(X = Y) without MWU's equal-variance-under-null
     * assumption, with a Welch–Satterthwaite df — the rank analogue of
     * preferring Welch's t to Student's t. Reported: p̂ (the effect —
@@ -2327,22 +2292,14 @@ object QualityChecks {
     * sums Σcx, Σcx² are exact DECIMAL(38,0) (≲ 4N³, inside 38 digits
     * to N ~ 10¹²) and p̂/W/df are ONE pinned double assembly rounded
     * 1e-6/1e-6/1e-4. Degenerate variance (all ranks tied) yields NULL
-    * W/df.
+    * W/df; an empty side gives n = 0 and NULL statistics.
     *
-    * Scale shape: the [[mannWhitney]] value-domain collapse + ONE
-    * range-partitioned THREE-column prefix pass + a single-row moment
-    * reduce + broadcast scalars. */
+    * Scale shape: the [[valueDomain]] collapse + ONE range-partitioned
+    * THREE-column prefix pass + a single-row moment reduce + broadcast
+    * scalars. */
   def brunnerMunzel(dfA: DataFrame, dfB: DataFrame,
                     valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def side(df: DataFrame, name: String) = graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-      .filter(sf.col("__v").isNotNull)
-      .groupBy("__v").agg(sf.count(sf.lit(1)).as(name))
-    val cells = side(dfA, "__ca").join(side(dfB, "__cb"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val cells = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .withColumn("__t", sf.col("__ca") + sf.col("__cb"))
       .localCheckpoint(true) // prefix + totals read it
     val tot = cells.agg(sf.sum("__ca").cast("long").as("__m"),
@@ -2391,8 +2348,10 @@ object QualityChecks {
         val df = (v1 + v2) * (v1 + v2) /
           (v1 * v1 / (mD - 1) + v2 * v2 / (nD - 1))
         val ok = sf.col("__m") > 1 && sf.col("__n") > 1 && (v1 + v2) > 0
-        Seq(sf.col("__m").as("n_a"), sf.col("__n").as("n_b"),
-          gf.roundAt(pHat, 6).as("p_hat"),
+        Seq(sf.coalesce(sf.col("__m"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__n"), sf.lit(0L)).as("n_b"),
+          sf.when(sf.col("__m") > 0 && sf.col("__n") > 0, gf.roundAt(pHat, 6))
+            .as("p_hat"),
           sf.when(ok, gf.roundAt(w, 6)).as("w_stat"),
           sf.when(ok, gf.roundAt(df, 4)).as("df"))
       }: _*)
@@ -2446,7 +2405,7 @@ object QualityChecks {
 
   /** Ansari–Bradley scale test (Ansari & Bradley 1960): do two samples
     * share the same DISPERSION around a common median — the SCALE
-    * companion of [[mannWhitney]]'s location test (MWU asks "is B
+    * companion of [[mannWhitneyU]]'s location test (MWU asks "is B
     * shifted", A–B asks "is B more spread out": a source whose doc
     * lengths have the same median but twice the spread needs a
     * different cap policy, not a different mixture weight). Scores run
@@ -2460,27 +2419,20 @@ object QualityChecks {
     * realized score multiset — mean = m·Σs/N,
     * var = m·n·(N·Σs² − (Σs)²)/(N²(N−1)) — which reduce to the
     * textbook AB moments when ties are absent. Values compress on the
-    * raw double domain by equality (the [[mannWhitney]] convention).
+    * raw double domain by equality (the [[mannWhitneyU]] convention).
     *
     * Determinism: score sums accumulate exact DECIMAL(38,0) at the
     * fixed scales; z is ONE pinned double assembly rounded 1e-6; a
-    * degenerate score variance yields NULL.
+    * degenerate score variance yields NULL z; an empty side gives
+    * n = 0 and NULL statistics.
     *
-    * Scale shape: one combined value-domain collapse + ONE
-    * range-partitioned prefix pass ([[graft.operators.StarSchema
-    * .globalPrefixSums]] — the row-340 rule) + a single-row moment
-    * aggregation + broadcast scalars. */
+    * Scale shape: the [[valueDomain]] collapse + ONE range-partitioned
+    * prefix pass ([[graft.operators.StarSchema.globalPrefixSums]] —
+    * the row-340 rule) + a single-row moment aggregation + broadcast
+    * scalars. */
   def ansariBradley(dfA: DataFrame, dfB: DataFrame,
                     valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def side(df: DataFrame, name: String) = graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-      .filter(sf.col("__v").isNotNull)
-      .groupBy("__v").agg(sf.count(sf.lit(1)).as(name))
-    val cells = side(dfA, "__ca").join(side(dfB, "__cb"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val cells = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .withColumn("__t", sf.col("__ca") + sf.col("__cb"))
       .localCheckpoint(true) // prefix + totals read it
     val tot = cells.agg(sf.sum("__ca").cast("long").as("__m"),
@@ -2511,11 +2463,13 @@ object QualityChecks {
           ((dec(sf.col("__m") + sf.col("__n")) * sf.col("__ss4") -
             sf.col("__ss2") * sf.col("__ss2")).cast("double")) /
           (bigN * bigN * (bigN - 1))
-        val ok = sf.col("__m") > 0 && sf.col("__n") > 0 && var4 > 0
-        Seq(sf.col("__m").as("n_a"), sf.col("__n").as("n_b"),
-          gf.roundAt(ab2 / 2, 4).as("ab_stat"),
-          gf.roundAt(mean2 / 2, 4).as("ab_mean"),
-          sf.when(ok, gf.roundAt((ab2 - mean2) / sf.sqrt(var4), 6)).as("z"))
+        val both = sf.col("__m") > 0 && sf.col("__n") > 0
+        Seq(sf.coalesce(sf.col("__m"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__n"), sf.lit(0L)).as("n_b"),
+          sf.when(both, gf.roundAt(ab2 / 2, 4)).as("ab_stat"),
+          sf.when(both, gf.roundAt(mean2 / 2, 4)).as("ab_mean"),
+          sf.when(both && var4 > 0, gf.roundAt((ab2 - mean2) / sf.sqrt(var4), 6))
+            .as("z"))
       }: _*)
   }
 
@@ -2608,7 +2562,6 @@ object QualityChecks {
         "ordered groups and bucketed values must be numeric so '<' is " +
         "the intended order — map labels to integer codes first")
     }
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
       .groupBy(sf.col(groupCol).as("g"), sf.col(valueCol).as("v"))
       .agg(sf.count(sf.lit(1)).as("c"))
@@ -2679,7 +2632,6 @@ object QualityChecks {
     * beyond the scalar reduce. */
   def spiegelhalterZ(df: DataFrame, confCol: String,
                      outcomeCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val p4 = sf.floor(sf.col(confCol).cast("double") * 1e4 + 0.5).cast("long")
     val base = df
       .filter(sf.col(confCol).isNotNull && sf.col(outcomeCol).isNotNull)
@@ -2766,7 +2718,6 @@ object QualityChecks {
     * Scale shape: one map-side-combinable group aggregation (k rows),
     * then a single-row reduction. */
   def anovaF(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val g = df.filter(sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).as("__g"), x4.as("__x4"))
@@ -2817,7 +2768,6 @@ object QualityChecks {
     * Scale shape: ONE map-side-combined group aggregation + a
     * single-row reduce — the [[anovaF]] shape. */
   def icc(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val g = df.filter(sf.col(valueCol).isNotNull && sf.col(groupCol).isNotNull)
       .select(sf.col(groupCol).as("__g"), x4.as("__x4"))
@@ -2894,7 +2844,6 @@ object QualityChecks {
       "a fractional score column would be silently floor-truncated by the " +
       "long cast (0.25-spaced buckets all collapse to 0); map buckets to " +
       "integer codes first")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val s = sf.col(scoreCol).cast("long")
     val y = sf.col(successCol).cast("boolean").cast("long")
     df.filter(sf.col(scoreCol).isNotNull && sf.col(successCol).isNotNull)
@@ -2988,7 +2937,6 @@ object QualityChecks {
     * broadcast scalar, one more k-row reduce. */
   def welchAnova(df: DataFrame, groupCol: String,
                  valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val g0 = df.filter(sf.col(valueCol).isNotNull && sf.col(groupCol).isNotNull)
       .select(sf.col(groupCol).as("__g"), x4.as("__x4"))
@@ -3056,7 +3004,6 @@ object QualityChecks {
   def cronbachAlpha(df: DataFrame, itemCols: Seq[String]): DataFrame = {
     require(itemCols.size >= 2,
       s"cronbachAlpha needs >= 2 item columns, got ${itemCols.size}")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val k = itemCols.size
     val base = df.filter(itemCols.map(c => sf.col(c).isNotNull).reduce(_ && _))
       .select(itemCols.zipWithIndex.map { case (c, i) =>
@@ -3107,7 +3054,6 @@ object QualityChecks {
     * Scale shape: ONE map-side-combinable 6-cell aggregation + a
     * one-row finish. Zero joins, zero windows. */
   def linsCcc(df: DataFrame, colA: String, colB: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def x4(c: String) = sf.floor(sf.col(c).cast("double") * 1e4 + 0.5).cast("long")
     val x = dec(sf.col("__x"))
     val y = dec(sf.col("__y"))
@@ -3168,7 +3114,6 @@ object QualityChecks {
   def plattScaling(df: DataFrame, scoreCol: String, labelCol: String,
                    iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 8, s"iters must be in [1, 8], got $iters")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def snap9(c: Column) = sf.floor(c * 1e9 + 0.5).cast("decimal(38,0)")
     val f4 = sf.floor(sf.col(scoreCol).cast("double") * 1e4 + 0.5).cast("long")
     val cells = df.filter(sf.col(scoreCol).isNotNull && sf.col(labelCol).isNotNull)
@@ -3260,7 +3205,6 @@ object QualityChecks {
   def blandAltman(df: DataFrame, colA: String, colB: String,
                   z: Double = 1.959964): DataFrame = {
     require(z > 0, s"z must be > 0, got $z")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def x4(c: String) = sf.floor(sf.col(c).cast("double") * 1e4 + 0.5).cast("long")
     val dom = df.filter(sf.col(colA).isNotNull && sf.col(colB).isNotNull)
       .select((x4(colA) - x4(colB)).as("__d4"))
@@ -3317,7 +3261,6 @@ object QualityChecks {
     * shape. */
   def gwetAC1(df: DataFrame, raterACol: String,
               raterBCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(raterACol).isNotNull && sf.col(raterBCol).isNotNull)
       .groupBy(sf.col(raterACol).cast("string").as("__a"),
         sf.col(raterBCol).cast("string").as("__b"))
@@ -3376,7 +3319,6 @@ object QualityChecks {
     * bounded by the bucketing contract) + a one-row finish. */
   def weightedKappa(df: DataFrame, raterACol: String,
                     raterBCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     Seq(raterACol, raterBCol).foreach { c =>
       val dt = df.schema(c).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
@@ -3426,7 +3368,6 @@ object QualityChecks {
     * moment reduction. */
   def spearman(df: DataFrame, colA: String, colB: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     // r14 optimization: ranks and every moment sum are functions of the
     // distinct (x, y) VALUE CELLS and their multiplicities, so the row
     // stream collapses to the joint domain in ONE map-side-combined
@@ -3687,7 +3628,6 @@ object QualityChecks {
   def brierDecomposition(df: DataFrame, confCol: String, outcomeCol: String,
                          nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 64, s"nBins must be in [2, 64], got $nBins")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val conf4 = sf.floor(sf.col(confCol).cast("double") * 1e4 + 0.5).cast("long")
     val d = sf.col("__c4") - sf.col("__y") * 10000L
     val g = df.filter(sf.col(confCol).isNotNull && sf.col(outcomeCol).isNotNull)
@@ -3741,7 +3681,6 @@ object QualityChecks {
     * Never sorts, never windows. */
   def cmhTest(df: DataFrame, stratumCol: String,
               groupA: Column, success: Column): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def cnt(p: Column) = sf.sum(p.cast("long"))
     val cells = df.filter(groupA.isNotNull && success.isNotNull)
       .select(sf.col(stratumCol).as("k"), groupA.as("ga"), success.as("sc"))
@@ -3807,7 +3746,6 @@ object QualityChecks {
     * scalar between them. */
   def breslowDay(df: DataFrame, stratumCol: String,
                  groupA: Column, success: Column): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def cnt(p: Column) = sf.sum(p.cast("long"))
     def fx6(c: Column) = sf.floor(c * 1e6 + 0.5).cast("long")
     val cells = df.filter(groupA.isNotNull && success.isNotNull)
@@ -3915,46 +3853,40 @@ object QualityChecks {
     * value domain the CDF gap at each step is the exact rational
     * \|c_a·n_b − c_b·n_a\| / (n_a·n_b), so W₁ accumulates as the exact
     * DECIMAL(38,0) sum of \|c_a·n_b − c_b·n_a\|·gap₄ with ONE final
-    * pinned division by n_a·n_b·1e4, rounded 1e-6.
+    * pinned division by n_a·n_b·1e4, rounded 1e-6. A one-value domain
+    * gives W₁ = 0; an empty side gives n = 0 and a NULL distance.
     *
-    * Scale shape: both samples compress map-side to (value, count);
-    * the cumulative window and the lead-gap run over that bounded
-    * VALUE DOMAIN (the ksTest/mannWhitneyU shape); single-row finish.
+    * Scale shape: the [[valueDomain]] collapse (on the 1e-4 grid); the
+    * running sums, the lead-gap and the totals are one window pass over
+    * that bounded VALUE DOMAIN (constant key, the [[ksTest]] window);
+    * single-row finish.
     * Raw rows never sort, never shuffle by value. */
   def wassersteinDistance(dfA: DataFrame, dfB: DataFrame,
                           valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    def x4(df: DataFrame, tag: Int) = df.filter(sf.col(valueCol).isNotNull)
-      .select(sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5)
-        .cast("long").as("v4"), sf.lit(tag).as("__t"))
-    val dom = x4(dfA, 0).union(x4(dfB, 1))
-      .groupBy("v4")
-      .agg(sf.sum(sf.when(sf.col("__t") === 0, 1L).otherwise(0L)).as("ca"),
-        sf.sum(sf.when(sf.col("__t") === 1, 1L).otherwise(0L)).as("cb"))
-    // domain-bounded single-partition window (the ksTest convention:
-    // formally partitioned on a constant so no unpartitioned-window
-    // shape appears; the frame is the compressed VALUE domain)
-    val byConst = Window.partitionBy(sf.pmod(sf.hash(sf.col("v4")), sf.lit(1)))
-    val w = byConst.orderBy("v4")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val stepped = dom
-      .withColumn("cum_a", sf.sum("ca").over(w))
-      .withColumn("cum_b", sf.sum("cb").over(w))
-      .withColumn("gap4",
-        sf.lead("v4", 1).over(byConst.orderBy("v4")) - sf.col("v4"))
-    val tot = dom.agg(sf.sum("ca").cast("long").as("na"),
-      sf.sum("cb").cast("long").as("nb"))
-    stepped.filter(sf.col("gap4").isNotNull)
-      .crossJoin(sf.broadcast(tot))
-      .agg(sf.max("na").as("n_a"), sf.max("nb").as("n_b"),
+    val dom = valueDomain(dfA, dfB,
+      sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long"))
+    val byV = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1))).orderBy("__v")
+    def upTo(end: Long) = byV.rowsBetween(Window.unboundedPreceding, end)
+    // ONE select, so one window pass (one sort of the domain): running
+    // sums, the lead gap and the totals (the whole-partition frame); the
+    // last value has no gap, so its NULL term drops out of the sum
+    dom
+      .select(sf.col("*"),
+        sf.sum("__ca").over(upTo(Window.currentRow)).as("cum_a"),
+        sf.sum("__cb").over(upTo(Window.currentRow)).as("cum_b"),
+        (sf.lead("__v", 1).over(byV) - sf.col("__v")).as("gap4"),
+        sf.sum("__ca").over(upTo(Window.unboundedFollowing)).as("na"),
+        sf.sum("__cb").over(upTo(Window.unboundedFollowing)).as("nb"))
+      .agg(sf.max("na").as("na"), sf.max("nb").as("nb"),
         sf.sum(sf.abs(dec(sf.col("cum_a")) * dec(sf.col("nb")) -
           dec(sf.col("cum_b")) * dec(sf.col("na"))) * dec(sf.col("gap4")))
           .as("__s"))
-      .select(sf.col("n_a"), sf.col("n_b"),
-        sf.when(sf.col("n_a") > 0 && sf.col("n_b") > 0, gf.roundAt(
-          sf.col("__s").cast("double") /
-            (sf.col("n_a").cast("double") * sf.col("n_b").cast("double") * 1e4),
+      .select(sf.coalesce(sf.col("na"), sf.lit(0L)).as("n_a"),
+        sf.coalesce(sf.col("nb"), sf.lit(0L)).as("n_b"),
+        sf.when(sf.col("na") > 0 && sf.col("nb") > 0, gf.roundAt(
+          sf.coalesce(sf.col("__s"), dec(sf.lit(0))).cast("double") /
+            (sf.col("na").cast("double") * sf.col("nb").cast("double") * 1e4),
           6)).as("w1"))
   }
 
@@ -4072,7 +4004,6 @@ object QualityChecks {
     * aggregation — zero data-row shuffles, the abLift/mcnemarTest
     * shape. */
   def welchTTest(dfA: DataFrame, dfB: DataFrame, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     def side(df: DataFrame, tag: Int) = df.filter(sf.col(valueCol).isNotNull)
       .select(x4.as("__x4"), sf.lit(tag).as("__t"))
@@ -4138,7 +4069,6 @@ object QualityChecks {
   def kruskalWallis(df: DataFrame, groupCol: String,
                     valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = graft.operators.Par.spread(
         df.select(sf.col(groupCol).cast("string").as("__g"),
           sf.col(valueCol).cast("double").as("__v")))
@@ -4202,7 +4132,6 @@ object QualityChecks {
     * a map-only per-row finish. Zero joins, zero windows. */
   def jarqueBera(df: DataFrame, groupCol: String,
                  valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val x = dec(sf.col("__x"))
     df.filter(sf.col(valueCol).isNotNull && sf.col(groupCol).isNotNull)
@@ -4256,7 +4185,6 @@ object QualityChecks {
     * group) + a map-only per-row finish. Zero joins, zero windows. */
   def dagostinoK2(df: DataFrame, groupCol: String,
                   valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val x = dec(sf.col("__x"))
     df.filter(sf.col(valueCol).isNotNull && sf.col(groupCol).isNotNull)
@@ -4329,7 +4257,6 @@ object QualityChecks {
                   raterCols: Seq[String]): DataFrame = {
     require(raterCols.size >= 2,
       s"fleissKappa needs >= 2 rater columns, got ${raterCols.size}")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val m = raterCols.size
     val base = df.filter(raterCols.map(c => sf.col(c).isNotNull).reduce(_ && _))
     val melted = raterCols.map(c =>
@@ -4388,7 +4315,6 @@ object QualityChecks {
                         raterCols: Seq[String]): DataFrame = {
     require(raterCols.size >= 2,
       s"krippendorffAlpha needs >= 2 rater columns, got ${raterCols.size}")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val melted = raterCols.map(c =>
         df.filter(sf.col(c).isNotNull)
           .select(sf.col(idCol).as("__i"), sf.col(c).cast("string").as("__r")))
@@ -4606,7 +4532,6 @@ object QualityChecks {
     * domain-sized rollups. No sort, no window, no row-level shuffle
     * beyond the cell collapse. */
   def kendallTau(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     // concordance compares cells with <, so the bucket types must carry
     // the intended order: string-typed ordinals would compare
     // lexicographically ('10' < '2') and silently corrupt nc/nd (r9
@@ -4682,7 +4607,6 @@ object QualityChecks {
     * the collapse. */
   def ordinalAssociation(df: DataFrame, xCol: String,
                          yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     Seq(xCol, yCol).foreach { c =>
       val dt = df.schema(c).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
@@ -4790,7 +4714,7 @@ object QualityChecks {
     * ranked WITHIN the block (ties → average ranks), and
     * χ²_F = 12/(nk(k+1))·ΣR_j² − 3n(k+1) reads on whether the rank
     * sums R_j differ — the nonparametric twin of the two-way layout
-    * that a one-way [[anova]] can't see: a treatment effect masked by
+    * that a one-way [[anovaF]] can't see: a treatment effect masked by
     * block-to-block level shifts. Incomplete blocks drop (the
     * classical requirement).
     *
@@ -4810,7 +4734,6 @@ object QualityChecks {
     * data-sized window), and a k-row rollup. */
   def friedman(df: DataFrame, blockCol: String, treatCol: String,
                valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(blockCol).isNotNull &&
         sf.col(treatCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(blockCol).as("b"), sf.col(treatCol).as("tr"),
@@ -4890,7 +4813,6 @@ object QualityChecks {
       s"pageTrend: column '$treatCol' has type ${dt.simpleString}; " +
       "ordered treatment codes must be INTEGER — map stages to integer " +
       "codes first")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(blockCol).isNotNull &&
         sf.col(treatCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(blockCol).as("b"), sf.col(treatCol).cast("long").as("tr"),
@@ -4959,7 +4881,6 @@ object QualityChecks {
   def quadeTest(df: DataFrame, blockCol: String, treatCol: String,
                 valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(blockCol).isNotNull &&
         sf.col(treatCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(blockCol).as("b"), sf.col(treatCol).as("tr"),
@@ -5044,7 +4965,6 @@ object QualityChecks {
   def wilcoxonSignedRank(df: DataFrame, subjectCol: String, condCol: String,
                          valueCol: String, condA: String, condB: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(subjectCol).isNotNull &&
         sf.col(condCol).isNotNull && sf.col(valueCol).isNotNull &&
         sf.col(condCol).cast("string").isin(condA, condB))
@@ -5093,7 +5013,7 @@ object QualityChecks {
 
   /** Bartlett's test of variance homogeneity (Bartlett 1937) — the
     * SCALE-axis sibling of [[anovaF]]'s location test and the
-    * parametric counterpart of the Brown–Forsythe/[[leveneTest]]
+    * parametric counterpart of the Brown–Forsythe ([[brownForsythe]])
     * median-center check: pooled-vs-per-group log-variance contrast
     * T = [(N−k)·ln s²_p − Σ(nᵢ−1)·ln s²ᵢ]/C ~ χ²(k−1). More powerful
     * than Levene under near-normality, famously fragile otherwise —
@@ -5111,7 +5031,6 @@ object QualityChecks {
     * and a k-row rollup — two exchanges total, nothing data-sized
     * past the first combine. */
   def bartlettTest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val stats = df.filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).cast("string").as("g"), v4.as("v"))
@@ -5160,36 +5079,29 @@ object QualityChecks {
     * instead of cancel — and V is invariant under cyclic shifts,
     * the standard choice for hour-of-day / phase-like comparisons.
     *
-    * Determinism: the [[ksTest]] integer machinery verbatim — per-side
-    * distinct-value compression, cross-multiplied integer gaps
+    * Determinism: the [[ksTest]] integer machinery verbatim —
+    * cross-multiplied integer gaps
     * cumA·n_B − cumB·n_A so D⁺ and D⁻ are exact integer maxima (both
     * ≥ 0: the final domain row has cumA·n_B = cumB·n_A); V and
     * Stephens' (√n_e + 0.155 + 0.24/√n_e)·V standardization
     * (Stephens 1970, n_e = n_A·n_B/(n_A+n_B)) are pinned assemblies
-    * rounded 1e-6/1e-4. Empty sides yield NULL.
+    * rounded 1e-6/1e-4. An empty side gives n = 0 and NULL statistics.
     *
-    * Scale shape: identical to [[ksTest]] — two map-side-combined
-    * value collapses, one full-outer domain merge, one domain-bounded
-    * cumulative window, a single-row finish. */
+    * Scale shape: the [[valueDomain]] collapse, one domain-bounded
+    * cumulative window (constant key, the [[ksTest]] window), a
+    * single-row finish. */
   def kuiperTest(dfA: DataFrame, dfB: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def side(df: DataFrame, tag: String) =
-      graft.operators.Par.spread(
-        df.select(sf.col(valueCol).cast("double").as("__v")))
-        .filter(sf.col("__v").isNotNull)
-        .groupBy("__v")
-        .agg(sf.count(sf.lit(1)).as(s"__c$tag"))
-    val merged = side(dfA, "a").join(side(dfB, "b"), Seq("__v"), "full_outer")
-      .select(sf.col("__v"),
-        sf.coalesce(sf.col("__ca"), sf.lit(0L)).as("__ca"),
-        sf.coalesce(sf.col("__cb"), sf.lit(0L)).as("__cb"))
+    val merged = valueDomain(dfA, dfB, sf.col(valueCol).cast("double"))
       .localCheckpoint(true) // read by the window and the totals
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("__v")), sf.lit(1)))
       .orderBy("__v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = merged.agg(sf.sum("__ca").as("__na"), sf.sum("__cb").as("__nb"))
     merged
-      .withColumn("__cuma", sf.sum("__ca").over(w))
-      .withColumn("__cumb", sf.sum("__cb").over(w))
+      // one select: window columns added by separate withColumns each get
+      // their own extracted partition key, so each would re-sort the domain
+      .select(sf.col("*"),
+        sf.sum("__ca").over(w).as("__cuma"), sf.sum("__cb").over(w).as("__cumb"))
       .crossJoin(sf.broadcast(totals))
       .withColumn("__gap",
         sf.col("__cuma") * sf.col("__nb") - sf.col("__cumb") * sf.col("__na"))
@@ -5202,7 +5114,8 @@ object QualityChecks {
           sf.greatest(sf.col("__dm"), sf.lit(0L))).cast("double") / (na * nb)
         val ne = na * nb / (na + nb)
         val ok = sf.col("__na") > 0 && sf.col("__nb") > 0
-        Seq(sf.col("__na").as("n_a"), sf.col("__nb").as("n_b"),
+        Seq(sf.coalesce(sf.col("__na"), sf.lit(0L)).as("n_a"),
+          sf.coalesce(sf.col("__nb"), sf.lit(0L)).as("n_b"),
           sf.when(ok, gf.roundAt(v, 6)).as("v_stat"),
           sf.when(ok, gf.roundAt(
             (sf.sqrt(ne) + 0.155 + sf.lit(0.24) / sf.sqrt(ne)) * v, 4))
@@ -5231,7 +5144,6 @@ object QualityChecks {
     * k-row MSE attach, and a k×k GROUP-DOMAIN self-join (never
     * data-sized) with total output order. */
   def tukeyHsd(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val stats = df.filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).cast("string").as("g"), v4.as("v"))
@@ -5287,7 +5199,6 @@ object QualityChecks {
     * stats attach back onto the row stream (map-only), one combinable
     * max-struct rollup — no shuffle carries data rows twice. */
   def grubbsTest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val rows = df.filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).cast("string").as("g"), v4.as("v"))
@@ -5366,7 +5277,6 @@ object QualityChecks {
     * a one-row finish. */
   def pairedTTest(df: DataFrame, keyCol: String, condCol: String,
                   valueCol: String, condA: String, condB: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val per = df.filter(sf.col(keyCol).isNotNull && sf.col(valueCol).isNotNull &&
         sf.col(condCol).isin(condA, condB))
@@ -5429,7 +5339,6 @@ object QualityChecks {
         sf.sum((!sf.col("__t") && sf.col("__o")).cast("long")).cast("long").as("c"),
         sf.sum((!sf.col("__t") && !sf.col("__o")).cast("long")).cast("long").as("d"))
       .localCheckpoint(true) // census + pooled read it
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val census = cells
       .select(sf.col("s"),
         (dec(sf.col("a")) * dec(sf.col("d")) -
@@ -5483,7 +5392,6 @@ object QualityChecks {
     * Scale shape: one combinable confusion rollup + a one-row finish. */
   def classificationPanel(df: DataFrame, scoreCol: String, labelCol: String,
                           threshold: Double = 0.0): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val rows = df.filter(sf.col(scoreCol).isNotNull && sf.col(labelCol).isNotNull)
       .select((sf.col(scoreCol).cast("double") > threshold).as("__p"),
         (sf.col(labelCol).cast("int") === 1).as("__y"))
@@ -5535,7 +5443,6 @@ object QualityChecks {
     * Scale shape: identical to row 175 — one group rollup + a one-row
     * finish. */
   def anovaEffects(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val g = df.filter(sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).as("__g"), x4.as("__x4"))
@@ -5642,7 +5549,6 @@ object QualityChecks {
     * collapse + one domain-bounded cumulative + a one-row finish. */
   def hashUniformityCvm(df: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(keyCol).isNotNull)
       .select(sf.col(keyCol).as("k")).distinct()
       .select(graft.operators.Sampling.hashBucket(sf.col("k")).as("b"))
@@ -5702,7 +5608,6 @@ object QualityChecks {
     * nothing shuffles but partial sums. */
   def logLogElasticity(df: DataFrame, groupCol: String, yCol: String,
                        xCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def ln9(c: Column) =
       sf.floor(sf.log(c.cast("double")) * 1e9 + 0.5).cast("long")
     val rows = df.filter(sf.col(groupCol).isNotNull &&
@@ -5753,7 +5658,6 @@ object QualityChecks {
     * finish — nothing shuffles but partial sums. */
   def partialCorrelation(df: DataFrame, xCol: String, yCol: String,
                          zCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def g4(name: String) =
       sf.floor(sf.col(name).cast("double") * 1e4 + 0.5).cast("long")
     val rows = df.filter(sf.col(xCol).isNotNull && sf.col(yCol).isNotNull &&
@@ -5860,7 +5764,6 @@ object QualityChecks {
     * completeness semi join, bounded per-block windows, k-row rollup. */
   def kendallW(df: DataFrame, blockCol: String, treatCol: String,
                valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(blockCol).isNotNull &&
         sf.col(treatCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(blockCol).as("b"), sf.col(treatCol).as("tr"),
@@ -5925,7 +5828,6 @@ object QualityChecks {
   def gesdOutliers(df: DataFrame, groupCol: String, valueCol: String,
                    rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 5, s"rounds must be in [1, 5], got $rounds")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     var cells = df.filter(sf.col(groupCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(groupCol).cast("string").as("g"), v4.as("v"))
@@ -5986,7 +5888,6 @@ object QualityChecks {
     * compressed), two margin rollups from the cells, three one-row
     * sums — nothing data-sized past the first combine. */
   def uncertaintyCoefficient(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def lnTerm(c: Column) = // Σ c·ln(c), 1e-9-scaled exact integers
       sf.sum(dec(c) * dec(sf.floor(sf.log(c.cast("double")) * 1e9 + 0.5)
         .cast("long")))
@@ -6034,7 +5935,6 @@ object QualityChecks {
     * Scale shape: one (x, y) cell collapse + two margin rollups + a
     * one-row finish — the row 417 plan exactly. */
   def gTest(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def lnTerm(c: Column) =
       sf.sum(dec(c) * dec(sf.floor(sf.log(c.cast("double")) * 1e9 + 0.5)
         .cast("long")))
@@ -6183,7 +6083,6 @@ object QualityChecks {
     * beyond it the χ²/G asymptotics are the right tool anyway. */
   def fisherExact(df: DataFrame, armCol: String, successCol: String,
                   maxN: Long = 1000000L): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val spark = df.sparkSession
     val cells = df.filter(sf.col(armCol).isNotNull && sf.col(successCol).isNotNull)
       .select(sf.col(armCol).cast("string").as("arm"),
@@ -6296,7 +6195,6 @@ object QualityChecks {
   def sketchQuantileAudit(df: DataFrame, valueCol: String,
                           accuracy: Int = 10000): DataFrame = {
     require(accuracy >= 100, s"accuracy must be >= 100, got $accuracy")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val vals = df.filter(sf.col(valueCol).isNotNull)
       .select(sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
         .as("v4"))
@@ -6431,7 +6329,6 @@ object QualityChecks {
     * value domain), then a 9-row threshold broadcast + a combinable
     * min per (half, decile). */
   def decileShift(df: DataFrame, tsCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val rows = df.filter(sf.col(tsCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.unix_micros(sf.col(tsCol).cast("timestamp")).as("us"),
         sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
@@ -6493,7 +6390,6 @@ object QualityChecks {
     * once. */
   def ebShrinkage(df: DataFrame, groupCol: String,
                   successCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val per = df.filter(sf.col(groupCol).isNotNull && sf.col(successCol).isNotNull)
       .groupBy(sf.col(groupCol).as("grp"))
       .agg(sf.count(sf.lit(1)).as("n"),
@@ -6547,7 +6443,6 @@ object QualityChecks {
   def orderReconciliation(lines: DataFrame, headers: DataFrame,
                           topK: Int = 20): DataFrame = {
     require(topK >= 1, s"orderReconciliation: topK must be >= 1, got $topK")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def c2(c: Column) = sf.floor(c.cast("double") * 100 + 0.5).cast("long")
     val rec = lines.filter(sf.col("l_orderkey").isNotNull &&
         sf.col("l_extendedprice").isNotNull && sf.col("l_discount").isNotNull &&
@@ -6591,7 +6486,6 @@ object QualityChecks {
     * Scale shape: one map-side-combined six-sum rollup — a single
     * scan and a one-row finish, the row 418 plan minus one column. */
   def demingRegression(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def g4(name: String) =
       sf.floor(sf.col(name).cast("double") * 1e4 + 0.5).cast("long")
     val rows = df.filter(sf.col(xCol).isNotNull && sf.col(yCol).isNotNull)
@@ -6642,7 +6536,6 @@ object QualityChecks {
     * table attaches — the row 430 plan on a different sum. */
   def bayesianAB(df: DataFrame, armCol: String, successCol: String,
                  maxN: Long = 1000000L): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val spark = df.sparkSession
     val cells = df.filter(sf.col(armCol).isNotNull && sf.col(successCol).isNotNull)
       .select(sf.col(armCol).cast("string").as("arm"),
@@ -6743,7 +6636,6 @@ object QualityChecks {
     * finish; the rater domain is bounded (k collected once). */
   def iccTwoWay(df: DataFrame, subjectCol: String, raterCol: String,
                 valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.filter(sf.col(subjectCol).isNotNull &&
         sf.col(raterCol).isNotNull && sf.col(valueCol).isNotNull)
       .groupBy(sf.col(subjectCol).as("s"), sf.col(raterCol).as("r"))
@@ -6823,7 +6715,6 @@ object QualityChecks {
     require(featureCols.nonEmpty && nBins >= 2,
       "bestSplits: need features and nBins >= 2")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val rows = df.filter((sf.col(labelCol) +: featureCols.map(sf.col))
         .map(_.isNotNull).reduce(_ && _))
       .select(sf.floor(sf.col(labelCol).cast("double") * 1e4 + 0.5).cast("long")
@@ -6980,7 +6871,6 @@ object QualityChecks {
   def signTestExact(df: DataFrame, keyCol: String, condCol: String,
                     valueCol: String, condA: String, condB: String,
                     maxN: Long = 1000000L): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val spark = df.sparkSession
     val per = df.filter(sf.col(keyCol).isNotNull && sf.col(valueCol).isNotNull &&
         sf.col(condCol).isin(condA, condB))
@@ -7069,7 +6959,6 @@ object QualityChecks {
     * scan and a one-row finish; nothing shuffles but partial sums. */
   def linearRegression2(df: DataFrame, yCol: String, x1Col: String,
                         x2Col: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def g4(name: String) =
       sf.floor(sf.col(name).cast("double") * 1e4 + 0.5).cast("long")
     val rows = df.filter(sf.col(yCol).isNotNull && sf.col(x1Col).isNotNull &&
@@ -7149,7 +7038,6 @@ object QualityChecks {
     * bucketing contract) — zero row-level work past the collapse. */
   def hoeffdingsD(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     Seq(xCol, yCol).foreach { c =>
       val dt = df.schema(c).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||

@@ -67,6 +67,12 @@ object functions {
     sf.floor(c * f + sf.lit(0.5)).cast("double") / f
   }
 
+  /** The exact-integer accumulator type of the operators' count and
+    * moment sums: DECIMAL(38,0) holds 38 digits where a long overflows
+    * past 19, and integer decimal arithmetic is bit-identical in every
+    * engine. */
+  private[graft] def dec(c: Column): Column = c.cast("decimal(38,0)")
+
   /** lowercase, collapse whitespace runs, trim. */
   def normalizeText(t: Column): Column =
     sf.trim(sf.regexp_replace(sf.lower(t), "\\s+", " "))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Corpus-level statistics for training-data curation: heavy-hitter
   * n-grams (boilerplate detection), unigram-LM document scoring
@@ -742,7 +743,6 @@ object CorpusStats {
   def sourceConcentration(docs: DataFrame, sourceCol: String,
                           textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val mass = Par.spread(docs.select(sf.col(sourceCol).as("source"), sf.col(textCol)))
       .select(sf.col("source"), gf.tokenCount(sf.col(textCol)).cast("long").as("__t"))
       .groupBy("source").agg(sf.sum("__t").as("__m"))
@@ -907,7 +907,6 @@ object CorpusStats {
     val per = st.groupBy("__src")
       .agg(sf.sum("c").as("n_tokens"), sf.count(sf.lit(1)).as("n_types"))
     def lnFx(c: Column) = sf.floor(sf.log(c.cast("double")) * 1e6 + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val m = per.select(lnFx(sf.col("n_tokens")).as("lx"), lnFx(sf.col("n_types")).as("ly"))
       .agg(sf.count(sf.lit(1)).as("n"),
         sf.sum(dec(sf.col("lx"))).as("sx"), sf.sum(dec(sf.col("ly"))).as("sy"),
@@ -1161,7 +1160,6 @@ object CorpusStats {
       uni.withColumn("__negc", sf.negate(sf.col("c_w"))),
       Seq("__negc", "w"), keyName = "__rank")
     def lnFx(c: Column) = sf.floor(sf.log(c.cast("double")) * 1e6 + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val m = ranked.select(lnFx(sf.col("__rank")).as("lx"), lnFx(sf.col("c_w")).as("ly"))
       .agg(sf.count(sf.lit(1)).as("n"),
         sf.sum(dec(sf.col("lx"))).as("sx"), sf.sum(dec(sf.col("ly"))).as("sy"),
@@ -1724,7 +1722,6 @@ object CorpusStats {
   def lorenzGini(docs: DataFrame, textCol: String,
                  sourceCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = sf.size(gf.wsTokens(sf.lower(sf.col(textCol)))).cast("long")
     val base = Par.spread(docs.select(sf.col(sourceCol).as("__s"),
         sf.col(textCol)))
@@ -1895,7 +1892,6 @@ object CorpusStats {
     * windows, no corpus sort. */
   def hillDiversity(docs: DataFrame, textCol: String,
                     sourceCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val terms = Par.spread(docs.select(sf.col(sourceCol).as("source"),
         sf.col(textCol)))
       .filter(sf.col(textCol).isNotNull && sf.col("source").isNotNull)
@@ -1946,7 +1942,6 @@ object CorpusStats {
   def termBurstiness(docs: DataFrame, idCol: String, textCol: String,
                      minCount: Long = 50, topK: Int = 50): DataFrame = {
     require(minCount >= 1 && topK >= 1, "need minCount >= 1 and topK >= 1")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = Par.spread(docs.select(sf.col(idCol), sf.col(textCol)))
       .filter(sf.col(textCol).isNotNull)
       .select(sf.col(idCol).as("__doc"),
@@ -1996,7 +1991,6 @@ object CorpusStats {
     * key equi join for the overlap + three one-row frames assembled
     * by broadcast cross joins. No windows, no driver collects. */
   def captureRecapture(a: DataFrame, b: DataFrame, keyCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val da = a.filter(sf.col(keyCol).isNotNull)
       .select(sf.col(keyCol).as("__k")).distinct().localCheckpoint(true)
     val db = b.filter(sf.col(keyCol).isNotNull)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Deduplication for large text corpora.
   *
@@ -1206,7 +1207,6 @@ object Dedup {
     * row. */
   def effectiveSampleSize(docs: DataFrame, idCol: String, textCol: String,
                           sourceCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val w = softDedupWeights(docs, idCol, textCol)
       .select(sf.col(sourceCol).cast("string").as("source"), sf.col("weight_fx"))
     val per = w.groupBy("source")
@@ -1583,7 +1583,6 @@ object Dedup {
     * blocked/banded row 127 machinery, never enumerated here. */
   def lshPlanner(pairs: DataFrame, simCol: String,
                  sketchBits: Int = 128): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val spark = pairs.sparkSession
     import spark.implicits._
     val cfg = lshPlannerConfigs(sketchBits).toDF("rows_per_band", "bands", "__s50")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Event-table analytics. `windowedAgg` is written so the identical
   * transform runs in batch here and under Structured Streaming in
@@ -319,7 +320,6 @@ object EventOps {
                 typeCol: String = "event_type",
                 revenueType: String = "purchase"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wk = sf.to_date(sf.date_trunc("week", sf.col(tsCol)))
     val base = events.filter(sf.col(keyCol).isNotNull && sf.col(tsCol).isNotNull)
     val firsts = base.groupBy(sf.col(keyCol).as("__u"))
@@ -502,7 +502,6 @@ object EventOps {
   def interEventBurstiness(events: DataFrame, keyCol: String = "user_id",
                            tsCol: String = "ts", idCol: String = "event_id",
                            typeCol: String = "event_type"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy(keyCol, typeCol)
       .orderBy(sf.col(tsCol), sf.col(idCol))
     val gaps = events
@@ -693,7 +692,6 @@ object EventOps {
                              typeCol: String = "event_type"): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val SCALE = 1000000000000L
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
     // Null key/ts rows drop BEFORE sequencing (matching
     // transitionLatency): a null key fuses keyless events into one
@@ -802,7 +800,6 @@ object EventOps {
                             typeCol: String = "event_type"): DataFrame = {
     require(steps >= 1 && steps <= 64, s"steps must be in [1, 64], got $steps")
     val SCALE = 1000000000000L
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
     // Null key/ts rows drop BEFORE sequencing (matching
     // transitionLatency/runLengthProfile): a null key would fuse all
@@ -903,7 +900,6 @@ object EventOps {
   def activityGini(events: DataFrame, typeCol: String = "event_type",
                    keyCol: String = "user_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val per = events.filter(sf.col(typeCol).isNotNull && sf.col(keyCol).isNotNull)
       .groupBy(sf.col(typeCol).as("t"), sf.col(keyCol).as("u"))
       .agg(sf.count(sf.lit(1)).as("x"))
@@ -1039,7 +1035,6 @@ object EventOps {
     require(horizon >= 2 && horizon <= 520,
       s"sbgRetention: horizon must be in [2, 520], got $horizon")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val hist = durations.filter(sf.col(durationCol).isNotNull &&
         sf.col(durationCol) >= 0)
       .groupBy(sf.col(durationCol).cast("long").as("__tw"))
@@ -1172,7 +1167,6 @@ object EventOps {
     val variant = sf.when(Sampling.hashBucket(sf.col(keyCol)) < 5000, "A")
       .otherwise("B")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val a4 = sf.when(variant === "A", x4)
     val b4 = sf.when(variant === "B", x4)
     def stats(pfx: String, c: Column) = Seq(
@@ -1327,7 +1321,6 @@ object EventOps {
     val variant = sf.when(Sampling.hashBucket(sf.col(keyCol)) < 5000, "A")
       .otherwise("B")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val a4 = sf.when(variant === "A", x4)
     val b4 = sf.when(variant === "B", x4)
     def stats(pfx: String, c: Column) = Seq(
@@ -1379,7 +1372,6 @@ object EventOps {
                         zThresh: Double = 2.5): DataFrame = {
     require(zThresh > 0, s"zThresh must be > 0, got $zThresh")
     val x4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val slotted = events.filter(sf.col(valueCol).isNotNull)
       .withColumn("hr", sf.hour(sf.col(tsCol)))
       .withColumn("__x4", x4)
@@ -1663,7 +1655,6 @@ object EventOps {
                          maxChannels: Int = 12): DataFrame = {
     require(maxChannels >= 1 && maxChannels <= 12,
       s"maxChannels must be in [1, 12], got $maxChannels")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val spark = events.sparkSession
     import spark.implicits._
     val base = events.filter(sf.col(keyCol).isNotNull && sf.col(typeCol).isNotNull)
@@ -1844,7 +1835,6 @@ object EventOps {
     * over the whole series and never a per-lag pass. */
   def acf(events: DataFrame, maxLag: Int = 6, binSec: Long = 3600): DataFrame = {
     require(maxLag >= 1 && maxLag <= 168, s"maxLag must be in [1, 168], got $maxLag")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -2085,7 +2075,6 @@ object EventOps {
                   tsCol: String = "ts", valueCol: String = "value",
                   binSec: Long = 3600): DataFrame = {
     require(binSec > 0, s"binSec must be > 0, got $binSec")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val binUs = binSec * 1000000L
     val base = events
       .filter(sf.col(valueCol).isNotNull && sf.col(tsCol).isNotNull)
@@ -2725,7 +2714,6 @@ object EventOps {
   def cupedLift(events: DataFrame, cutoff: String,
                 keyCol: String = "user_id", valueCol: String = "value",
                 tsCol: String = "ts"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cut = sf.lit(cutoff).cast("timestamp")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val per = events
@@ -2803,7 +2791,6 @@ object EventOps {
                  treatPred: Column => Column,
                  keyCol: String = "user_id", valueCol: String = "value",
                  tsCol: String = "ts"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cut = sf.lit(cutoff).cast("timestamp")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val base = events
@@ -2998,7 +2985,6 @@ object EventOps {
     require(minPeriod >= 2, s"minPeriod must be >= 2, got $minPeriod")
     require(maxPeriod >= minPeriod && maxPeriod <= 1000,
       s"maxPeriod must be in [minPeriod, 1000], got $maxPeriod")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("x"))
       .localCheckpoint(true) // per-type stats + the projection read it
@@ -3060,7 +3046,6 @@ object EventOps {
   def forecastBacktest(events: DataFrame, season: Int = 24,
                        binSec: Long = 3600): DataFrame = {
     require(season >= 1 && season <= 10000, s"season must be in [1, 1e4], got $season")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -3119,7 +3104,6 @@ object EventOps {
   def seasonalStrength(events: DataFrame, period: Int = 24,
                        binSec: Long = 3600): DataFrame = {
     require(period >= 2 && period <= 10000, s"period must be in [2, 1e4], got $period")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -3204,7 +3188,6 @@ object EventOps {
                         binSec: Long = 3600): DataFrame = {
     require(period >= 2 && period <= 10000,
       s"period must be in [2, 1e4], got $period")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -3270,7 +3253,6 @@ object EventOps {
           maxLag: Int = 6, binSec: Long = 3600): DataFrame = {
     require(maxLag >= 1 && maxLag <= 168, s"maxLag must be in [1, 168], got $maxLag")
     require(typeX != typeY, "ccf needs two distinct event types (use acf for one)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .filter(sf.col("event_type").isin(typeX, typeY))
       .select(sf.col("event_type").as("t"), sf.col("bin"),
@@ -3385,7 +3367,6 @@ object EventOps {
                   binSec: Long = 3600): DataFrame = {
     require(causeType != effectType,
       "grangerLag1 needs two distinct event types")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .filter(sf.col("event_type").isin(causeType, effectType))
       .select(sf.col("event_type").as("t"), sf.col("bin"),
@@ -3452,7 +3433,6 @@ object EventOps {
     * combinable per-type moment aggregation (5 cells per map task).
     * No joins past the grid build, no windows. */
   def dispersionProfile(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("n_events").as("v"))
       .groupBy("t")
@@ -3586,7 +3566,6 @@ object EventOps {
                    tsCol: String = "ts", valueCol: String = "value",
                    binSec: Long = 3600): DataFrame = {
     require(binSec > 0, s"binSec must be > 0, got $binSec")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val binUs = binSec * 1000000L
     val cells = events
       .filter(sf.col(valueCol).isNotNull && sf.col(tsCol).isNotNull)
@@ -3674,7 +3653,6 @@ object EventOps {
       s"hurstExponent: block size ${sizes.max} > 4096 would build " +
       "unbounded per-block windows; use a coarser binSec instead")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // bounds scalar + the size fan-out read it
@@ -3766,7 +3744,6 @@ object EventOps {
     require(kSigmas >= 0 && hSigmas > 0,
       s"cusumChart: need kSigmas >= 0 and hSigmas > 0, got $kSigmas/$hSigmas")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // moments + the prefix windows read it
@@ -3837,7 +3814,6 @@ object EventOps {
   def shewhartChart(events: DataFrame, typeCol: String = "event_type",
                     tsCol: String = "ts", binSec: Long = 86400): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // moments + the zone pass read it
@@ -3933,7 +3909,6 @@ object EventOps {
                     rFrac: Double = 0.2,
                     maxBins: Long = 100000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec, maxBins)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // moments + both join sides read it
@@ -4004,7 +3979,6 @@ object EventOps {
     * rollup — no joins, no windows at any corpus size. */
   def demandProfile(events: DataFrame, typeCol: String = "event_type",
                     tsCol: String = "ts", binSec: Long = 86400): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("n_events").as("v"))
     g.groupBy("t").agg(
@@ -4063,7 +4037,6 @@ object EventOps {
     require(delta >= 0 && lambdaSigmas > 0,
       s"pageHinkley: need delta >= 0 and lambdaSigmas > 0")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // moments + the PH pass read it
@@ -4126,7 +4099,6 @@ object EventOps {
     * finish — no windows, no per-row projection. */
   def itsExcess(events: DataFrame, typeCol: String = "event_type",
                 tsCol: String = "ts", binSec: Long = 86400): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, typeCol, tsCol, "value", binSec)
       .select(sf.col(typeCol).as("t"), sf.col("bin"), sf.col("n_events").as("v"))
       .localCheckpoint(true) // cut + both halves read it
@@ -4225,7 +4197,6 @@ object EventOps {
       s"holtSmoothing: lags must be in [2, 128], got $lags")
     val spark = events.sparkSession
     import spark.implicits._
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val sv = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -4339,7 +4310,6 @@ object EventOps {
       s"holtWintersSmoothing: lags must be in [2*period, 512], got $lags")
     val spark = events.sparkSession
     import spark.implicits._
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val weights = holtWintersWeights(alpha, beta, gamma, period, lags)
     val coverage9 = weights.map(_._2).sum
     val sv = denseSeries(events, binSec = binSec)
@@ -4372,7 +4342,6 @@ object EventOps {
     * chain (slope/intercept from DECIMAL(38,0) moments), identical in
     * any engine; callers snap it at their own grid before summing. */
   private def trendResiduals(events: DataFrame, binSec: Long): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -4415,7 +4384,6 @@ object EventOps {
     * Scale shape: grid once + one broadcast moment row + one
     * combinable SSE rollup + a map-only per-row finish. */
   def regressionInfluence(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val r = trendResiduals(events, binSec)
       .withColumn("__e6", sf.floor(sf.col("__e") * 1e6 + 0.5).cast("long"))
       .localCheckpoint(true) // SSE + per-row finish read it
@@ -4462,7 +4430,6 @@ object EventOps {
     * Scale shape: grid once + broadcast moments + one combinable
     * five-sum rollup per type. */
   def breuschPagan(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val r = trendResiduals(events, binSec)
       .withColumn("__e3", sf.floor(sf.col("__e") * 1e3 + 0.5).cast("long"))
       .select(sf.col("t"), sf.col("bin"),
@@ -4657,7 +4624,6 @@ object EventOps {
     * Scale shape: grid once + one (type, count) domain collapse +
     * two domain-bounded cumulative windows + one rollup. */
   def loadConcentration(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("n_events").as("v"))
       .groupBy("t", "v").agg(sf.count(sf.lit(1)).as("c"))
@@ -4798,7 +4764,6 @@ object EventOps {
     *
     * Scale shape: grid once + one combinable per-type rollup. */
   def negativeBinomialFit(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("n_events").as("v"))
     g.groupBy("t")
@@ -4904,7 +4869,6 @@ object EventOps {
                         binSec: Long = 3600): DataFrame = {
     require(blockBins >= 2 && blockBins <= 100000,
       s"blockBins must be in [2, 1e5], got $blockBins")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val Sqrt6OverPi = math.sqrt(6.0) / math.Pi
     val EulerGamma = 0.5772156649015329
     def retConst(t: Int) = math.log(-math.log(1.0 - 1.0 / t))
@@ -5051,7 +5015,6 @@ object EventOps {
   def interarrivalExpFit(events: DataFrame, typeCol: String = "event_type",
                          userCol: String = "user_id",
                          tsCol: String = "ts"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy("u", "t").orderBy(sf.col("us"), sf.col("event_id"))
     val gaps = events
       .filter(sf.col(tsCol).isNotNull && sf.col(userCol).isNotNull)
@@ -5175,7 +5138,6 @@ object EventOps {
     * sort), then a (type, pattern) cell collapse — at most 6 cells per
     * type — and a per-type rollup. */
   def permutationEntropy(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -5236,7 +5198,6 @@ object EventOps {
     * Scale shape: grid once + TWO lag equi joins (lead-1, lead-2) and
     * ONE per-type rollup — no window, no sort, combinable sums. */
   def hjorthParameters(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -5296,7 +5257,6 @@ object EventOps {
     * Scale shape: grid once + one bounded 2-lag explode equi join
     * (the row 266 shape) + per-type rollup. */
   def ar2YuleWalker(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
         sf.col("n_events").as("v"))
@@ -5367,7 +5327,6 @@ object EventOps {
     * fall out of the same join via conditional aggregation) + one
     * per-type rollup. No window function, no per-series sort. */
   def varianceRatio(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val qs = Seq(2, 4, 8)
     val maxQ = qs.max
     val g = denseSeries(events, binSec = binSec)
@@ -5439,7 +5398,6 @@ object EventOps {
   def concurrencyProfile(events: DataFrame, keyCol: String = "user_id",
                          tsCol: String = "ts", idCol: String = "event_id",
                          gapSec: Long = 1800): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val byKey = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
     val lagTs = sf.lag(sf.col(tsCol), 1).over(byKey)
     val isNew = sf.when(lagTs.isNull, 1).otherwise(
@@ -5536,7 +5494,6 @@ object EventOps {
       s"maxExtra must be in [1, 64], got $maxExtra")
     require(targetWaitProb > 0 && targetWaitProb < 1,
       s"targetWaitProb in (0,1), got $targetWaitProb")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val prof = concurrencyProfile(events, keyCol, tsCol, idCol, gapSec)
       .select(sf.col("l_littles").as("__a"))
     // c domain with running ln k! and the k < c partial sum of
@@ -5597,7 +5554,6 @@ object EventOps {
     * with a bounded dense-grid cumulative, a one-row moment reduce. */
   def bassDiffusion(events: DataFrame, keyCol: String = "user_id",
                     tsCol: String = "ts"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val firstSeen = events
       .filter(sf.col(keyCol).isNotNull && sf.col(tsCol).isNotNull)
       .groupBy(keyCol)
@@ -5682,7 +5638,6 @@ object EventOps {
   def thetaForecast(events: DataFrame, alpha: Double = 0.3,
                     binSec: Long = 3600): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val beta = 1.0 - alpha
     val sv = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
@@ -5752,7 +5707,6 @@ object EventOps {
   def ipsOffPolicy(events: DataFrame, contextCol: Column,
                    armCol: String = "event_type",
                    rewardCol: String = "value"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = events
       .filter(sf.col(armCol).isNotNull && sf.col(rewardCol).isNotNull &&
         contextCol.isNotNull)
@@ -5874,7 +5828,6 @@ object EventOps {
     * BIN domain + one bin-keyed pair join (types² × bins), then a
     * combinable moment rollup per pair — domain work only. */
   def grangerMatrix(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def d(c: Column) = c.cast("double")
     val sv = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),
@@ -5930,7 +5883,6 @@ object EventOps {
   }
 
   def transferEntropy(events: DataFrame, binSec: Long = 3600): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def d(c: Column) = c.cast("double")
     val sv = denseSeries(events, binSec = binSec)
       .select(sf.col("event_type").as("t"), sf.col("bin"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Geospatial primitives over plain lat/lon columns — the minimum a
   * curation/analytics engine needs once a dimension carries
@@ -109,7 +110,6 @@ object Geo {
     * finishes. */
   def moransI(df: DataFrame, idCol: String, latCol: String, lonCol: String,
               valueCol: String, radiusDeg: Double): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val pts = df
       .select(sf.col(idCol).as("__id"),
         sf.col(latCol).cast("double").as("__lat"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Graph analytics over relational co-occurrence data: basket-style
   * pair mining (association lift) and fixed-point PageRank. The
@@ -807,7 +808,6 @@ object Graph {
     * rollups + three one-row sums — the row-282 shape; nothing pairs
     * over ITEMS (the binomials count pairs in closed form). */
   def adjustedRandIndex(labels: DataFrame, classes: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def t2(c: Column) = dec(c) * dec(c - 1)
     val cells = labels.select(sf.col("item"), sf.col("community"))
       .join(classes.select(sf.col("item"), sf.col("cls")), "item")
@@ -856,7 +856,6 @@ object Graph {
     * place of degrees. */
   def numericAssortativity(edges: DataFrame, values: DataFrame,
                            nodeCol: String, valueCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val vals = values.filter(sf.col(valueCol).isNotNull)
       .select(sf.col(nodeCol).as("__node"), v4.as("__v"))
@@ -903,7 +902,6 @@ object Graph {
     * Scale shape: one (community, cls) cell collapse + two margin
     * rollups + a one-row finish — the row 410 plan exactly. */
   def clusteringAgreement(labels: DataFrame, classes: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def t2(c: Column) = dec(c) * dec(c - 1)
     def lnTerm(c: Column) =
       sf.sum(dec(c) * dec(sf.floor(sf.log(c.cast("double")) * 1e9 + 0.5)
@@ -951,7 +949,6 @@ object Graph {
     * materialized (item, community) labeling. */
   private def quality(edges: DataFrame, labeling: DataFrame): DataFrame = {
     val labels = labeling.select(sf.col("item"), sf.col("community").as("lbl"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val deg = edges.groupBy(sf.col("src").as("item"))
       .agg(sf.count(sf.lit(1)).as("dg"))
     val m2t = edges.agg(sf.count(sf.lit(1)).as("m2"))
@@ -1409,7 +1406,6 @@ object Graph {
   /** [[degreeAssortativity]] over a pre-mined directed (src, dst)
     * edge list — the mine-once `*FromEdges` family member. */
   def degreeAssortativityFromEdges(edges: DataFrame): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val deg = edges.groupBy("src").agg(sf.count(sf.lit(1)).as("d"))
     val jk = edges
       .join(deg.select(sf.col("src"), sf.col("d").as("j")), "src")
@@ -1784,7 +1780,6 @@ object Graph {
     * collapse + two label-domain margins + a one-row finish. */
   def attributeAssortativity(edges: DataFrame, labels: DataFrame,
                              nodeCol: String, labelCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val lab = labels.filter(sf.col(labelCol).isNotNull)
       .select(sf.col(nodeCol).as("__node"),
         sf.col(labelCol).cast("string").as("__lbl")).distinct()
@@ -2075,7 +2070,6 @@ object Graph {
     require(nSources >= 1 && nSources <= 64,
       s"nSources must be in [1, 64], got $nSources")
     require(depth >= 1 && depth <= 8, s"depth must be in [1, 8], got $depth")
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val edges = (if (callerCached(edges0)) edges0 else Par.spread(edges0))
       .select(sf.col("src"), sf.col("dst")).localCheckpoint(true)
     val nodes = edges.select(sf.col("src").as("item")).distinct()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Deterministic recommender BASELINE evaluation over basket data —
   * the two numbers any recommendation effort must beat before a model
@@ -84,7 +85,6 @@ object Recsys {
                      k: Int = 5, minPairCount: Long = 2): DataFrame = {
     require(k >= 1, s"itemSimilarity: k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val rows = lines.filter(sf.col(basketCol).isNotNull && sf.col(itemCol).isNotNull)
       .select(sf.col(basketCol).as("b"), sf.col(itemCol).as("i"))
       .localCheckpoint(true) // pairs + margins read it
@@ -203,7 +203,6 @@ object Recsys {
   def bradleyTerry(contests: DataFrame, contestCol: String, entityCol: String,
                    scoreCol: String, iters: Int = 8): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters must be in [1, 32], got $iters")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val SCALE = 1000000000L
     val per = contests
       .filter(sf.col(contestCol).isNotNull && sf.col(entityCol).isNotNull &&

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.{functions => sf}
+import graft.functions.dec
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 
@@ -532,7 +533,6 @@ object Sampling {
                      budget: Long, alpha: Double = 0.3): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val counts = docs.filter(sf.col(sourceCol).isNotNull)
       .groupBy(sf.col(sourceCol).as("source"))
       .agg(sf.sum(weight.cast("long")).as("n_tokens"))
@@ -622,7 +622,6 @@ object Sampling {
   def neymanAllocation(df: DataFrame, stratumCol: String, valueCol: String,
                        budget: Long = 1000L): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val v4 = sf.floor(sf.col(valueCol).cast("double") * 1e4 + 0.5).cast("long")
     val per = df.filter(sf.col(stratumCol).isNotNull && sf.col(valueCol).isNotNull)
       .select(sf.col(stratumCol).cast("string").as("stratum"), v4.as("v"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Similarity search over embedding columns (array<float>).
   *
@@ -67,7 +68,6 @@ object Similarity {
     * norm join are bounded-domain operations, no corpus data moves. */
   def centroidSimilarity(emb: DataFrame, labelCol: String = "label",
                          vecCol: String = "embedding"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cent = labelCentroids(emb, labelCol, vecCol)
       .select(sf.col("label"), sf.col("dim"),
         sf.floor(sf.col("centroid") * 1e4 + 0.5).cast("long").as("__c4"))
@@ -1115,7 +1115,6 @@ object Similarity {
     * rollup. */
   def meanDotMatrix(emb: DataFrame, labelCol: String,
                     vecCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val comps = Par.spread(emb
       .filter(sf.col(labelCol).isNotNull && sf.col(vecCol).isNotNull)
       .select(sf.col(labelCol).cast("string").as("cls"),
@@ -1183,7 +1182,6 @@ object Similarity {
     * (dim, label) rollup; everything after runs on the dims × labels
     * domain. */
   def fisherRatio(emb: DataFrame, labelCol: String, vecCol: String): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val finite = !sf.isnan(sf.col("x")) &&
       sf.abs(sf.col("x")) <= sf.lit(Double.MaxValue)
     val comps = Par.spread(emb
@@ -2283,7 +2281,6 @@ object Similarity {
     * enumeration anywhere. */
   def anisotropy(emb: DataFrame, labelCol: String = "label",
                  vecCol: String = "embedding"): DataFrame = {
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = Par.spread(emb
         .filter(sf.col(vecCol).isNotNull && sf.col(labelCol).isNotNull)
         .select(sf.col(labelCol).cast("string").as("lbl"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => sf}
 import graft.sources.Tables
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** The reference's star-schema ETL re-expressed on the TPC-H-ish corpus:
   * fact = lineitem⋈orders with derived measures (reference fact_I94 +
@@ -345,7 +346,6 @@ object StarSchema {
     * broadcast. */
   def abcClassification(df: DataFrame, keyCol: String,
                         amountCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val fx = sf.floor(sf.col(amountCol).cast("double") * 100 + 0.5).cast("long")
     val per = df.filter(sf.col(amountCol).isNotNull && sf.col(keyCol).isNotNull)
       .groupBy(sf.col(keyCol).as("key")).agg(sf.sum(fx).as("__rev"))
@@ -547,7 +547,6 @@ object StarSchema {
     * Scale shape: one (part, supplier) rollup + one per-part rollup
     * with a combinable max(struct) — two shuffles at any scale. */
   def supplierConcentration(lineitem: DataFrame): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val q4 = sf.floor(sf.col("l_quantity").cast("double") * 1e4 + 0.5).cast("long")
     val per = lineitem
       .filter(sf.col("l_partkey").isNotNull && sf.col("l_suppkey").isNotNull &&
@@ -652,7 +651,6 @@ object StarSchema {
     * equi join on part (matched-model) + one-row finishes. */
   def priceIndices(df: DataFrame, itemCol: String, tsCol: String,
                    qtyCol: String, amountCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val rows = df.filter(sf.col(tsCol).isNotNull && sf.col(itemCol).isNotNull &&
         sf.col(qtyCol).cast("double") > 0 && sf.col(amountCol).isNotNull)
       .select(sf.col(itemCol).as("item"),
@@ -722,7 +720,6 @@ object StarSchema {
     * the row 459 plan with the matched-model filter relaxed. */
   def priceVolumeBridge(df: DataFrame, groupCol: String, tsCol: String,
                         qtyCol: String, amountCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val rows = df.filter(sf.col(tsCol).isNotNull && sf.col(groupCol).isNotNull &&
         sf.col(qtyCol).cast("double") > 0 && sf.col(amountCol).isNotNull)
       .select(sf.col(groupCol).cast("string").as("grp"),
@@ -945,7 +942,6 @@ object StarSchema {
     * they're clustered by. */
   def basketDiversity(lines: DataFrame, orderCol: String = "l_orderkey",
                       brandCol: String = "p_brand"): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val ob = lines.filter(sf.col(orderCol).isNotNull && sf.col(brandCol).isNotNull)
       .groupBy(sf.col(orderCol).as("o"), sf.col(brandCol).as("b"))
       .agg(sf.count(sf.lit(1)).as("c"))
@@ -1037,7 +1033,6 @@ object StarSchema {
                       co: Double = 1.0): DataFrame = {
     require(cu > 0 && co > 0, s"costs must be > 0, got cu=$cu co=$co")
     val frac6 = math.round(cu / (cu + co) * 1e6) // pinned 1e-6 fractile
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val daily = lines
       .filter(sf.col(groupCol).isNotNull && sf.col(dateCol).isNotNull &&
         sf.col(qtyCol).isNotNull)
@@ -1104,7 +1099,6 @@ object StarSchema {
                   eventDateCol: String, amountCol: String,
                   maxAge: Int = 12): DataFrame = {
     require(maxAge >= 1 && maxAge <= 120, s"maxAge in [1,120], got $maxAge")
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def monthOf(c: String) = sf.expr(
       s"(year(CAST($c AS TIMESTAMP)) - 1970) * 12 + month(CAST($c AS TIMESTAMP)) - 1")
     val cells = lines
@@ -1202,7 +1196,6 @@ object StarSchema {
               amountCol: String): DataFrame = {
     val spark = orders.sparkSession
     import spark.implicits._
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = orders.filter(sf.col(dateCol).isNotNull &&
         sf.col(custCol).isNotNull && sf.col(amountCol).isNotNull)
       .select(sf.expr(s"unix_micros(CAST($dateCol AS TIMESTAMP))").as("__us"),
@@ -1261,7 +1254,6 @@ object StarSchema {
     * mean-price attach — corpus touched once. */
   def priceVolumeMix(lines: DataFrame, groupCol: String, dateCol: String,
                      qtyCol: String, amountCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = lines.filter(sf.col(groupCol).isNotNull &&
         sf.col(dateCol).isNotNull && sf.col(qtyCol).isNotNull &&
         sf.col(amountCol).isNotNull)
@@ -1338,7 +1330,6 @@ object StarSchema {
   def crostonForecast(lines: DataFrame, groupCol: String, dateCol: String,
                       qtyCol: String, alpha: Double = 0.1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val beta = 1.0 - alpha // driver-pinned base, shared with the oracle
     val daily = lines
       .filter(sf.col(groupCol).isNotNull && sf.col(dateCol).isNotNull &&
@@ -1450,7 +1441,6 @@ object StarSchema {
     * numbering pass, one combinable moment reduce — no global sort
     * materializes on one task. */
   def weibullFit(df: DataFrame, keyCol: String, durationCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = df.filter(sf.col(keyCol).isNotNull && sf.col(durationCol).isNotNull)
       .select(sf.col(keyCol).as("__k"),
         sf.col(durationCol).cast("double").as("__t"))
@@ -1519,7 +1509,6 @@ object StarSchema {
     require(orderingCost > 0 && holdingCostPerYear > 0 && leadTimeDays >= 1 &&
       z >= 0, s"eoqPolicy: bad K=$orderingCost h=$holdingCostPerYear " +
       s"L=$leadTimeDays z=$z")
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val cEoq = 2.0 * orderingCost * 365.0 / holdingCostPerYear
     val zSqrtL = z * math.sqrt(leadTimeDays.toDouble)
@@ -1575,7 +1564,6 @@ object StarSchema {
     * collapse each, a ONE-ROW horizon broadcast — no windows. */
   def bullwhip(lines: DataFrame, orders: DataFrame, groupCol: String,
                qtyCol: String = "l_quantity"): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     def wk(c: String) = sf.expr(
       s"unix_micros(CAST($c AS TIMESTAMP)) div 604800000000")
@@ -1628,7 +1616,6 @@ object StarSchema {
   def fillRate(lines: DataFrame, orders: DataFrame, groupCol: String,
                leadDays: Int = 7, qtyCol: String = "l_quantity"): DataFrame = {
     require(leadDays >= 0, s"fillRate: leadDays must be >= 0, got $leadDays")
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     def day(c: String) = sf.expr(
       s"unix_micros(CAST($c AS TIMESTAMP)) div 86400000000")
@@ -1680,7 +1667,6 @@ object StarSchema {
     * key-domain moment collapse + a broadcast class join. */
   def abcXyzMatrix(lines: DataFrame, keyCol: String, dateCol: String,
                    qtyCol: String, amountCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val abc = abcClassification(lines, keyCol, amountCol)
       .select(sf.col(keyCol).as("__ak"), sf.col("abc_class"),
         sf.col("amount").as("__amt"))

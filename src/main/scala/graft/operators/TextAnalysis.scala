@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
+import graft.functions.dec
 
 /** Text-analysis operators for training-data curation. All pure
   * expressions — per-row, map-only, fully codegen'd; at 100 TB these
@@ -1655,7 +1656,6 @@ object TextAnalysis {
     * domain-compressed. No joins, no windows. */
   def lexicalRichness(docs0: DataFrame, sourceCol: String,
                       textCol: String): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val docs = Par.spread(docs0.select(sf.col(sourceCol), sf.col(textCol)))
       .filter(sf.length(sf.trim(sf.col(textCol))) > 0)
     val cells = docs

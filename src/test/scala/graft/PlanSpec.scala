@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{functions => sf}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.StarSchema
 import graft.sources.Tables
 
@@ -205,24 +206,105 @@ class PlanSpec extends SparkFunSuite {
     assert(corpusWindows.nonEmpty, "within-bucket running sum missing")
   }
 
-  test("hodges-lehmann: cumulative pass has no one-partition window") {
-    // The difference domain is |distinct(A)|x|distinct(B)| points; with
-    // near-continuous values it approaches row counts, so the weighted-
-    // median prefix must ride globalPrefixSums (range partition +
-    // broadcast offsets), never a window keyed on a constant. A window
-    // whose partition spec is empty OR entirely foldable is a single
-    // task sorting the whole domain — the exact shape this pin forbids.
-    val docs = Tables.load(spark, sf001, "documents")
-    val df = graft.dq.QualityChecks.hodgesLehmann(
-      docs.filter(sf.col("source") === "src1"),
-      docs.filter(sf.col("source") === "src2"), "n_chars")
-    df.collect()
-    val all = collectAll(executed(df))
-    val oneTask = all.collect {
-      case wx: org.apache.spark.sql.execution.window.WindowExec
-        if wx.partitionSpec.isEmpty || wx.partitionSpec.forall(_.foldable) => wx }
-    assert(oneTask.isEmpty,
-      s"one-partition window in hodgesLehmann plan: ${oneTask.size}")
+  /** Runs `action` and returns the QueryExecution of every action it
+    * ran on the session (eager checkpoints included), in order. The
+    * listener is fed asynchronously; the bus delivers in order, so the
+    * marker collect's event arrives after every earlier one. */
+  private def executions(action: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = spark.range(1).toDF("__plan_spec_marker")
+    spark.listenerManager.register(listener)
+    try {
+      action
+      marker.collect()
+      Iterator.continually(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map { e => assert(e != null, "listener events missing"); e }
+        .takeWhile { case (_, qe) =>
+          !qe.analyzed.output.exists(_.name == "__plan_spec_marker") }
+        .map(_._2).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("two-sample tests: one aggregate builds the value domain, no full-outer merge") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, Pmod}
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan,
+      UnaryNode, Union, Window => LogicalWindow}
+    import graft.dq.{QualityChecks => qc}
+    val ev = Tables.load(spark, sf001, "events")
+    val a = ev.filter(sf.col("event_type") === "click")
+    val b = ev.filter(sf.col("event_type") === "view")
+    // (operator, whether its prefix over the value domain is a
+    // constant-key window); the others ride globalPrefixSums, whose
+    // difference or value domain may approach row counts and must
+    // never sort on one task
+    val table = Seq[(String, (DataFrame, DataFrame, String) => DataFrame, Boolean)](
+      ("ksTest", qc.ksTest, true),
+      ("kuiperTest", qc.kuiperTest, true),
+      ("mannWhitneyU", qc.mannWhitneyU, true),
+      ("cliffsDelta", qc.cliffsDelta, true),
+      ("wassersteinDistance", qc.wassersteinDistance, true),
+      ("cramerVonMises", qc.cramerVonMises, false),
+      ("andersonDarling", qc.andersonDarling, false),
+      ("brunnerMunzel", qc.brunnerMunzel, false),
+      ("ansariBradley", qc.ansariBradley, false),
+      ("energyDistance", qc.energyDistance, false),
+      ("hodgesLehmann", qc.hodgesLehmann, false))
+    def overUnion(p: LogicalPlan): Boolean = p match {
+      case _: Union => true
+      case _: Aggregate => false
+      case u: UnaryNode => overUnion(u.child)
+      case _ => false
+    }
+    // windows on ONE partition: no key, a constant key, or pmod(_, 1)
+    // (the analyzer moves a computed key into a Project below the
+    // window: look it up); globalPrefixSums' numPartitions-row offsets
+    // window (ordered by __pid) is bounded and does not count
+    def oneTaskWindows(p: LogicalPlan): Seq[LogicalWindow] = {
+      val defs = p.flatMap(_.expressions)
+        .flatMap(_.collect { case a: Alias => a.exprId -> a.child }).toMap
+      def oneTask(w: LogicalWindow) = {
+        val keys = w.partitionSpec.map {
+          case r: AttributeReference => defs.getOrElse(r.exprId, r)
+          case e => e
+        }
+        keys.forall(_.foldable) || keys.exists {
+          case Pmod(_, Literal(1, _), _) => true
+          case _ => false
+        }
+      }
+      p.collect { case w: LogicalWindow if oneTask(w) &&
+        !w.orderSpec.exists(_.references.exists(_.name == "__pid")) => w }
+    }
+    // every operator is checked; the failures are reported together
+    val failures = table.flatMap { case (name, op, windowed) =>
+      val qes = executions(op(a, b, "value").collect())
+      val logical = qes.map(_.optimizedPlan)
+      val fullOuter = logical.exists(_.exists {
+        case j: Join => j.joinType == FullOuter
+        case _ => false
+      })
+      val counts = logical.flatMap(_.collect {
+        case g: Aggregate if g.output.exists(o => o.name == "__ca" || o.name == "__cb") => g })
+      val oneGrouping = counts.nonEmpty && counts.forall { g =>
+        Set("__ca", "__cb").subsetOf(g.output.map(_.name).toSet) &&
+          g.groupingExpressions.size == 1 && overUnion(g.child)
+      }
+      val oneTask = logical.flatMap(oneTaskWindows)
+      Seq(
+        Option.when(fullOuter)(s"$name merges its domain with a full-outer join"),
+        Option.when(!oneGrouping)(
+          s"$name: the domain is not one grouping of the two samples' union"),
+        Option.when(oneTask.nonEmpty != windowed)(
+          s"$name: ${oneTask.size} one-partition domain window(s), expected " +
+            (if (windowed) "the constant-key prefix window" else "none"))).flatten
+    }
+    if (failures.nonEmpty) fail(failures.mkString("\n", "\n", ""))
   }
 
   test("zipf slope: vocabulary ranking has no unpartitioned window") {
