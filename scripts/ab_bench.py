@@ -12,10 +12,19 @@ Each side runs from its own checkout, so each builds and caches its own
 code and inputs under its own perfbench/.work.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's
-median and quartiles, the parent's IQR (Q3 - Q1), and the pairs the
-change wins (ties count for neither side). A gain holds when the
-change wins at least 9/10 of the pairs and the medians differ by more
-than the parent's IQR. Run from the repository root.
+median and quartiles, the parent's IQR (Q3 - Q1), the pairs the change
+wins (ties count for neither side) and three readings:
+
+  gain        the change wins at least 9/10 of the pairs and the
+              medians differ by more than the parent's IQR;
+  worse       the change's median is worse than the parent's by more
+              than the metric's `bound` (a fraction of the parent's
+              median);
+  unresolved  the parent's IQR exceeds `bound` times its median, so
+              these runs cannot show a regression within the bound,
+              unless every change run beats every parent run.
+
+Run from the repository root.
 """
 import argparse
 import json
@@ -94,23 +103,39 @@ def main():
         with open(args.json, "w") as fh:
             json.dump(runs, fh, indent=1)
 
+    report(runs, e2e, args.workload, args.seeds, args.seconds)
+
+
+def readings(a, b, lower, bound):
+    """(wins, gain, worse, unresolved) for parent runs a and change runs b."""
+    n = len(a)
+    wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
+    aq1, aq3 = quartiles(a)
+    ma, mb = statistics.median(a), statistics.median(b)
+    gain = wins >= 0.9 * n and abs(mb - ma) > aq3 - aq1 and (mb < ma) == lower
+    worse = ((mb - ma) if lower else (ma - mb)) > bound * ma
+    dominates = max(b) < min(a) if lower else min(b) > max(a)
+    unresolved = aq3 - aq1 > bound * ma and not dominates
+    return wins, gain, worse, unresolved
+
+
+def report(runs, e2e, workload, seeds, seconds):
     n = len(runs["parent"])
-    print(f"workload {args.workload}, {n} pairs, seeds {args.seeds}, "
-          f"--seconds {args.seconds:g}")
-    cols = "{:<12} {:>34} {:>34} {:>11} {:>6}  {}"
+    print(f"workload {workload}, {n} pairs, seeds {seeds}, --seconds {seconds:g}")
+    cols = "{:<12} {:>34} {:>34} {:>11} {:>6}  {:<4} {:<5} {}"
     print(cols.format("metric", "parent median [Q1, Q3]", "change median [Q1, Q3]",
-                      "parent IQR", "wins", "gain"))
+                      "parent IQR", "wins", "gain", "worse", "unresolved"))
+    yn = lambda flag: "yes" if flag else "no"
     for m in e2e:
         name, lower = m["name"], m["better"] == "lower"
         a = [r["metrics"][name]["value"] for r in runs["parent"]]
         b = [r["metrics"][name]["value"] for r in runs["change"]]
-        wins = sum((y < x) if lower else (y > x) for x, y in zip(a, b))
+        wins, gain, worse, unresolved = readings(a, b, lower, m["bound"])
         (aq1, aq3), (bq1, bq3) = quartiles(a), quartiles(b)
         ma, mb = statistics.median(a), statistics.median(b)
-        gain = wins >= 0.9 * n and abs(mb - ma) > aq3 - aq1 and (mb < ma) == lower
         print(cols.format(name, f"{ma:.4g} [{aq1:.4g}, {aq3:.4g}]",
                           f"{mb:.4g} [{bq1:.4g}, {bq3:.4g}]", f"{aq3 - aq1:.4g}",
-                          f"{wins}/{n}", "yes" if gain else "no"))
+                          f"{wins}/{n}", yn(gain), yn(worse), yn(unresolved)))
     for side in ("parent", "change"):
         bad = [r["seed"] for r in runs[side] if not r["correct"] or r["failed"]]
         print(f"{side}: failed or incorrect seeds: {bad or 'none'}")

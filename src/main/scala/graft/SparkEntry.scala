@@ -5632,7 +5632,7 @@ object SparkEntry {
     "q108_transitions" ->
       """WITH p AS (SELECT event_type AS from_type,
         |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events),
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |cells AS (SELECT from_type, to_type, COUNT(*) AS n FROM p
         |  WHERE to_type IS NOT NULL GROUP BY 1, 2),
         |t AS (SELECT from_type AS f, SUM(n) AS tot FROM cells GROUP BY 1)
@@ -10592,7 +10592,7 @@ object SparkEntry {
     "q307_conditional_entropy" ->
       """WITH p AS (SELECT event_type AS f,
         |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS t
-        |  FROM events),
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |cells AS (SELECT f, t, CAST(COUNT(*) AS BIGINT) AS n FROM p
         |  WHERE t IS NOT NULL GROUP BY 1, 2),
         |ft AS (SELECT f, CAST(SUM(n) AS BIGINT) AS nf FROM cells GROUP BY 1),

@@ -858,12 +858,14 @@ object QualityChecks {
     val pCol = gf.roundAt(poly * sf.exp(-(x * x)), 9)
     val byConst = Window.partitionBy(sf.pmod(sf.hash(sf.col("group")), sf.lit(1)))
     val ordered = byConst.orderBy(sf.col("p_value").asc_nulls_last, sf.col("group"))
+    // __m and bh_rank in one select share one copy of the computed key,
+    // so one shuffle feeds both windows
     val scored = agg
       .withColumn("z", zCol)
       .withColumn("p_value", sf.when(sf.col("z").isNotNull, pCol))
-      .withColumn("__m", sf.count(sf.col("p_value")).over(byConst))
-      .withColumn("bh_rank", sf.when(sf.col("p_value").isNotNull,
-        sf.row_number().over(ordered)).cast("long"))
+      .select(sf.col("*"), sf.count(sf.col("p_value")).over(byConst).as("__m"),
+        sf.when(sf.col("p_value").isNotNull, sf.row_number().over(ordered))
+          .cast("long").as("bh_rank"))
       .withColumn("bh_crit", sf.when(sf.col("bh_rank").isNotNull, gf.roundAt(
         sf.col("bh_rank").cast("double") * sf.lit(alpha) /
           sf.col("__m").cast("double"), 9)))

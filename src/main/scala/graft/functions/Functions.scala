@@ -122,12 +122,8 @@ object functions {
   def jaccardSorted(a: Column, b: Column): Column =
     kernel(DoubleType, "jaccardSorted", a, b)
 
-  /** Sorted distinct xxhash64 form of a shingle set (see
-    * Kernels.hashSetSorted): the compact verification representation. */
-  def hashShingles(shingles: Column): Column =
-    kernel(ArrayType(LongType, containsNull = false), "hashSetSorted", shingles)
-
-  /** hashShingles(wordShingles(t)) in one fused allocation-free pass
+  /** Sorted distinct xxhash64 form of `wordShingles(t)` — the compact
+    * verification representation — in one fused allocation-free pass
     * (see Kernels.hashedWsShingles). */
   def hashedWsShingles(t: Column): Column =
     kernel(ArrayType(LongType, containsNull = false), "hashedWsShingles", t)
@@ -166,7 +162,8 @@ object functions {
     * distribution (see Kernels.charEntropy). */
   def charEntropy(t: Column): Column = kernel(DoubleType, "charEntropy", t)
 
-  /** Jaccard over two hashShingles arrays (primitive merge scan). */
+  /** Jaccard over two sorted distinct hash arrays such as
+    * [[hashedWsShingles]] (primitive merge scan). */
   def jaccardSortedLong(a: Column, b: Column): Column =
     kernel(DoubleType, "jaccardSortedLong", a, b)
 

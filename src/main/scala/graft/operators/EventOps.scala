@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
 import graft.functions.dec
@@ -546,6 +547,42 @@ object EventOps {
       .orderBy("event_type")
   }
 
+  /** Per-key (from_type, to_type, c) transition counts: each key's
+    * events order by (ts, id) and every event but the last emits one
+    * transition to its successor. Null key/ts rows drop BEFORE
+    * sequencing: a null key fuses keyless events into one synthetic
+    * sequence, and a null ts orders NULLS FIRST in Spark but NULLS LAST
+    * in DuckDB — either breaks oracle parity on dirty data. */
+  private def transitionCells(events: DataFrame, keyCol: String, tsCol: String,
+                              idCol: String, typeCol: String): DataFrame = {
+    val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
+    events.filter(sf.col(keyCol).isNotNull && sf.col(tsCol).isNotNull)
+      .select(sf.col(typeCol).as("from_type"),
+        sf.lead(sf.col(typeCol), 1).over(w).as("to_type"))
+      .filter(sf.col("to_type").isNotNull)
+      .groupBy("from_type", "to_type")
+      .agg(sf.count(sf.lit(1)).as("c"))
+  }
+
+  /** A collected [[transitionCells]] chain: its states (from ∪ to
+    * types, a null type included) and per cell (from, to, count,
+    * from-type total) as state indices. Cells from a null type are
+    * left out: the SQL twins' equi joins never match them. */
+  private final case class Chain(state: StructField, states: IndexedSeq[Any],
+                                 cells: Seq[(Int, Int, Long, Long)])
+
+  private def chain(events: DataFrame, op: String, keyCol: String, tsCol: String,
+                    idCol: String, typeCol: String): Chain = {
+    val table = transitionCells(events, keyCol, tsCol, idCol, typeCol)
+    val rows = DriverFold.collect(table, op, typeCol)
+    val states = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct.toIndexedSeq
+    val at = states.zipWithIndex.toMap
+    val live = rows.filterNot(_.isNullAt(0))
+    val out = live.groupMapReduce(_.get(0))(_.getLong(2))(_ + _)
+    Chain(table.schema("from_type").copy(name = "state"), states,
+      live.map(r => (at(r.get(0)), at(r.get(1)), r.getLong(2), out(r.get(0)))).toSeq)
+  }
+
   /** First-order Markov transition matrix over per-key event-type
     * sequences: P(next_type | type), the behavioral model behind
     * "what do users do after X" and the input to next-action
@@ -553,7 +590,8 @@ object EventOps {
     * total order, so every (from, to) transition is a pure function
     * of the data; the last event of a key emits no transition.
     * Probabilities are each row's count over the from-type total,
-    * computed as one double division from exact counts.
+    * computed as one double division from exact counts. Rows with a
+    * null key or ts are dropped before sequencing ([[transitionCells]]).
     *
     * Scale shape: one shuffle on the key for the lead window, then a
     * map-side-combined groupBy over at most |types|² cells; the
@@ -561,13 +599,8 @@ object EventOps {
   def transitionMatrix(events: DataFrame, keyCol: String = "user_id",
                        tsCol: String = "ts", idCol: String = "event_id",
                        typeCol: String = "event_type"): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
-    val pairs = events
-      .select(sf.col(typeCol).as("from_type"),
-        sf.lead(sf.col(typeCol), 1).over(w).as("to_type"))
-      .filter(sf.col("to_type").isNotNull)
-      .groupBy("from_type", "to_type")
-      .agg(sf.count(sf.lit(1)).as("n"))
+    val pairs = transitionCells(events, keyCol, tsCol, idCol, typeCol)
+      .withColumnRenamed("c", "n")
     val totals = pairs.groupBy(sf.col("from_type").as("__f"))
       .agg(sf.sum("n").as("__t"))
     pairs.join(sf.broadcast(totals), sf.col("from_type") === sf.col("__f"))
@@ -626,7 +659,8 @@ object EventOps {
     * says journeys are near-deterministic (bot/script signature
     * alongside row-237's cadence score).
     *
-    * Determinism: transition counts exact; every entropy term snaps
+    * Determinism: transition counts exact (null key/ts rows dropped
+    * before sequencing, [[transitionCells]]); every entropy term snaps
     * to the 1e-12 integer grid BEFORE its unordered sum (the row-343
     * convention), outputs round 1e-6.
     *
@@ -636,12 +670,9 @@ object EventOps {
   def conditionalEntropy(events: DataFrame, keyCol: String = "user_id",
                          tsCol: String = "ts", idCol: String = "event_id",
                          typeCol: String = "event_type"): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
-    val cells = events
-      .select(sf.col(typeCol).as("f"),
-        sf.lead(sf.col(typeCol), 1).over(w).as("t"))
-      .filter(sf.col("t").isNotNull)
-      .groupBy("f", "t").agg(sf.count(sf.lit(1)).as("n"))
+    val cells = transitionCells(events, keyCol, tsCol, idCol, typeCol)
+      .select(sf.col("from_type").as("f"), sf.col("to_type").as("t"),
+        sf.col("c").as("n"))
       .localCheckpoint(true) // margins + term passes read it
     val fromT = cells.groupBy("f").agg(sf.sum("n").cast("long").as("nf"))
     val toT = cells.groupBy("t").agg(sf.sum("n").cast("long").as("nt"))
@@ -684,50 +715,28 @@ object EventOps {
     * successor) leak mass — pi sums to <= 1e12; the leak itself is a
     * funnel signal.
     *
-    * Scale shape: the chain is |types|² cells — everything after the
-    * one windowed pair extraction is bounded-domain joins. */
+    * Scale shape: the chain is |types|² cells — after the one windowed
+    * pair extraction its table is collected once and the rounds fold
+    * on the driver ([[DriverFold]]); more than 2^20 cells refuse,
+    * naming `typeCol` to coarsen. */
   def stationaryDistribution(events: DataFrame, iters: Int = 3,
                              keyCol: String = "user_id", tsCol: String = "ts",
                              idCol: String = "event_id",
                              typeCol: String = "event_type"): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val SCALE = 1000000000000L
-    val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
-    // Null key/ts rows drop BEFORE sequencing (matching
-    // transitionLatency): a null key fuses keyless events into one
-    // synthetic sequence; a null ts orders NULLS FIRST in Spark but
-    // NULLS LAST in DuckDB — either breaks oracle parity on dirty data.
-    val counts = events
-      .filter(sf.col(keyCol).isNotNull && sf.col(tsCol).isNotNull)
-      .select(sf.col(typeCol).as("from_type"),
-        sf.lead(sf.col(typeCol), 1).over(w).as("to_type"))
-      .filter(sf.col("to_type").isNotNull)
-      .groupBy("from_type", "to_type")
-      .agg(sf.count(sf.lit(1)).as("c"))
-      .localCheckpoint(true)
-    val outTotals = counts.groupBy(sf.col("from_type").as("__f"))
-      .agg(sf.sum("c").as("__ct"))
-    val edges = counts.join(sf.broadcast(outTotals),
-      sf.col("from_type") === sf.col("__f")).drop("__f").localCheckpoint(true)
-    val states = counts.select(sf.col("from_type").as("state"))
-      .union(counts.select(sf.col("to_type")))
-      .distinct().localCheckpoint(true)
-    val nStates = states.count()
-    require(nStates > 0, "stationaryDistribution: no transitions")
-    var pi = states.select(sf.col("state"), sf.lit(SCALE / nStates).as("pi_fx"))
+    val ch = chain(events, "stationaryDistribution", keyCol, tsCol, idCol, typeCol)
+    val n = ch.states.size
+    require(n > 0, "stationaryDistribution: no transitions")
+    var pi = Array.fill(n)(SCALE / n)
     for (_ <- 1 to iters) {
-      val next = edges
-        .join(pi, sf.col("from_type") === sf.col("state"))
-        .select(sf.col("to_type"),
-          // exact: (pi * c) div c_total on decimals, back to long
-          (dec(sf.col("pi_fx")) * dec(sf.col("c"))).as("__num"), sf.col("__ct"))
-        .select(sf.col("to_type"),
-          sf.expr("CAST(__num div __ct AS BIGINT)").as("__m"))
-        .groupBy("to_type").agg(sf.sum("__m").as("__s"))
-      pi = states.join(next, sf.col("state") === sf.col("to_type"), "left")
-        .select(sf.col("state"), sf.coalesce(sf.col("__s"), sf.lit(0L)).as("pi_fx"))
+      val next = new Array[Long](n)
+      for ((f, t, c, out) <- ch.cells) next(t) += (BigInt(pi(f)) * c / out).toLong
+      pi = next
     }
-    pi.select(sf.col("state"), sf.col("pi_fx"),
+    DriverFold.frame(events, ch.states.indices.map(i => Row(ch.states(i), pi(i))),
+        ch.state, StructField("pi_fx", LongType))
+      .select(sf.col("state"), sf.col("pi_fx"),
         gf.roundAt(sf.col("pi_fx").cast("double") / SCALE, 6).as("pi"))
       .orderBy(sf.col("pi_fx").desc, sf.col("state"))
   }
@@ -786,13 +795,15 @@ object EventOps {
     * mass honestly leaks, as in row 182).
     *
     * Determinism: the q119 fixed-point discipline — p rides exact
-    * 1e12 integers, every round is Σ(c_st · p_t) div c_s in
-    * DECIMAL(38,0) floor division on exact counts, bit-replayable at
-    * any parallelism; the oracle unrolls the same recurrence.
+    * 1e12 integers, every round is Σ(c_st · p_t) div c_s, the exact
+    * integer floor division of the DECIMAL(38,0) twin on exact counts,
+    * bit-replayable at any parallelism; the oracle unrolls the same
+    * recurrence.
     *
-    * Scale shape: one key-windowed pair extraction, then
-    * bounded-domain work only — |types|² cells per round, `steps`
-    * rounds, lineage cut every 4 rounds. */
+    * Scale shape: one key-windowed pair extraction, then the
+    * |types|²-cell table is collected once and the `steps` rounds fold
+    * on the driver ([[DriverFold]]); more than 2^20 cells refuse,
+    * naming `typeCol` to coarsen. */
   def absorptionProbability(events: DataFrame,
                             conversionType: String = "purchase",
                             steps: Int = 16, keyCol: String = "user_id",
@@ -800,44 +811,18 @@ object EventOps {
                             typeCol: String = "event_type"): DataFrame = {
     require(steps >= 1 && steps <= 64, s"steps must be in [1, 64], got $steps")
     val SCALE = 1000000000000L
-    val w = Window.partitionBy(keyCol).orderBy(sf.col(tsCol), sf.col(idCol))
-    // Null key/ts rows drop BEFORE sequencing (matching
-    // transitionLatency/runLengthProfile): a null key would fuse all
-    // keyless events into one synthetic sequence, and a null ts orders
-    // NULLS FIRST in Spark but NULLS LAST in DuckDB — either silently
-    // breaks oracle parity on dirty data.
-    val counts = events
-      .filter(sf.col(keyCol).isNotNull && sf.col(tsCol).isNotNull)
-      .select(sf.col(typeCol).as("from_type"),
-        sf.lead(sf.col(typeCol), 1).over(w).as("to_type"))
-      .filter(sf.col("to_type").isNotNull)
-      .groupBy("from_type", "to_type")
-      .agg(sf.count(sf.lit(1)).as("c"))
-      .localCheckpoint(true)
-    val outTotals = counts.groupBy(sf.col("from_type").as("__f"))
-      .agg(sf.sum("c").as("__ct"))
-    val edges = counts.join(sf.broadcast(outTotals),
-      sf.col("from_type") === sf.col("__f")).drop("__f").localCheckpoint(true)
-    val states = counts.select(sf.col("from_type").as("state"))
-      .union(counts.select(sf.col("to_type")))
-      .distinct().localCheckpoint(true)
-    def pin(c: Column) = sf.when(sf.col("state") === conversionType,
-      sf.lit(SCALE)).otherwise(c)
-    var p = states.select(sf.col("state"), pin(sf.lit(0L)).as("p_fx"))
-    for (i <- 1 to steps) {
-      val nxt = edges
-        .join(p, sf.col("to_type") === sf.col("state"))
-        .select(sf.col("from_type"),
-          (dec(sf.col("p_fx")) * dec(sf.col("c"))).as("__num"), sf.col("__ct"))
-        .select(sf.col("from_type"),
-          sf.expr("CAST(__num div __ct AS BIGINT)").as("__m"))
-        .groupBy("from_type").agg(sf.sum("__m").cast("long").as("__s"))
-      p = states.join(nxt, sf.col("state") === sf.col("from_type"), "left")
-        .select(sf.col("state"),
-          pin(sf.coalesce(sf.col("__s"), sf.lit(0L))).as("p_fx"))
-      if (i % 4 == 0) p = p.localCheckpoint(true) // lineage cut
+    val ch = chain(events, "absorptionProbability", keyCol, tsCol, idCol, typeCol)
+    val absorbing = ch.states.map(_ == conversionType)
+    def pin(p: Array[Long]) = p.indices.map(i => if (absorbing(i)) SCALE else p(i)).toArray
+    var p = pin(new Array[Long](ch.states.size))
+    for (_ <- 1 to steps) {
+      val next = new Array[Long](p.length)
+      for ((f, t, c, out) <- ch.cells) next(f) += (BigInt(p(t)) * c / out).toLong
+      p = pin(next)
     }
-    p.select(sf.col("state"), sf.col("p_fx"),
+    DriverFold.frame(events, ch.states.indices.map(i => Row(ch.states(i), p(i))),
+        ch.state, StructField("p_fx", LongType))
+      .select(sf.col("state"), sf.col("p_fx"),
         gf.roundAt(sf.col("p_fx").cast("double") / SCALE, 6)
           .as("p_convert"))
       .orderBy(sf.col("p_fx").desc, sf.col("state"))
@@ -1917,11 +1902,12 @@ object EventOps {
       .localCheckpoint(true) // bounded cumulative reads it
     val w = Window.partitionBy(sf.pmod(sf.hash(sf.col("decile")), sf.lit(1)))
       .orderBy("decile").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // one select: each separate withColumn would extract its own copy
+    // of the computed key and shuffle + sort the deciles again
     byDecile
-      .withColumn("__cnt", sf.sum("n_treated").over(w))
-      .withColumn("__cct", sf.sum("__ct").over(w))
-      .withColumn("__cnc", sf.sum("n_control").over(w))
-      .withColumn("__ccc", sf.sum("__cc").over(w))
+      .select(sf.col("*"), sf.sum("n_treated").over(w).as("__cnt"),
+        sf.sum("__ct").over(w).as("__cct"), sf.sum("n_control").over(w).as("__cnc"),
+        sf.sum("__cc").over(w).as("__ccc"))
       .select({
         val rt = sf.col("__ct").cast("double") / sf.col("n_treated").cast("double")
         val rc = sf.col("__cc").cast("double") / sf.col("n_control").cast("double")

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.sql.{functions => sf}
 import graft.{functions => gf}
-import graft.functions.dec
 
 /** Deterministic recommender BASELINE evaluation over basket data —
   * the two numbers any recommendation effort must beat before a model
@@ -188,22 +188,26 @@ object Recsys {
     *
     * Determinism: scores snap to a 1e-4 grid before comparison; wins
     * are exact integers; the MM recursion runs in 1e-9 fixed point
-    * (every term floor(n_ij·1e18/(p9_i+p9_j)) in DECIMAL(38,0), the
-    * q119 discipline) with a mean-1 renormalization each round, so
-    * the `iters`-th iterate is bit-replayable by the unrolled oracle
-    * at any parallelism. Zero-win entities go to strength 0; a
-    * disconnected comparison graph yields each component's internal
-    * scale (documented MM behavior — the fixed iterate is still
+    * (every term floor(n_ij·1e18/(p9_i+p9_j)), the exact integer
+    * floor division of the DECIMAL(38,0) twin — the q119 discipline)
+    * with a mean-1 renormalization each round, so the `iters`-th
+    * iterate is bit-replayable by the unrolled oracle at any
+    * parallelism. Zero-win entities go to strength 0; a disconnected
+    * comparison graph yields each component's internal scale
+    * (documented MM behavior — the fixed iterate is still
     * deterministic).
     *
     * Scale shape: one corpus pass to (contest, entity) sums, one
     * contest-keyed self join bounded by max-contest-size² (the row
-    * 156 mining discipline), then DOMAIN work only — |entities|²
-    * cells per MM round, lineage cut every 4 rounds. */
+    * 156 mining discipline), then the |entities|²-cell duel table is
+    * collected once and the MM rounds fold on the driver
+    * ([[DriverFold]]); more than 2^20 cells refuse, naming
+    * `entityCol` to coarsen. */
   def bradleyTerry(contests: DataFrame, contestCol: String, entityCol: String,
                    scoreCol: String, iters: Int = 8): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters must be in [1, 32], got $iters")
     val SCALE = 1000000000L
+    val E18 = BigInt(10).pow(18)
     val per = contests
       .filter(sf.col(contestCol).isNotNull && sf.col(entityCol).isNotNull &&
         sf.col(scoreCol).isNotNull)
@@ -215,52 +219,36 @@ object Recsys {
       .filter(sf.col("a.__s") =!= sf.col("b.__s"))
       .select(sf.col("a.__e").as("__i"), sf.col("b.__e").as("__j"),
         (sf.col("a.__s") > sf.col("b.__s")).cast("long").as("__wi"))
-    // n_ij totals and W_i margins over the bounded entity domain
-    val cells = duels.groupBy("__i", "__j")
+    // n_ij totals and i's wins w_ij over the bounded entity-pair domain
+    val table = duels.groupBy("__i", "__j")
       .agg(sf.count(sf.lit(1)).as("__n"), sf.sum("__wi").as("__w"))
-      .localCheckpoint(true) // read every MM round
-    val undirected = cells.select(sf.col("__i").as("ea"), sf.col("__j").as("eb"),
-        sf.col("__n"))
-      .union(cells.select(sf.col("__j"), sf.col("__i"), sf.col("__n")))
-      .localCheckpoint(true)
-    val wins = cells.select(sf.col("__i").as("e"), sf.col("__w").as("w"))
-      .union(cells.select(sf.col("__j"), sf.col("__n") - sf.col("__w")))
-      .groupBy("e").agg(sf.sum("w").as("wins"))
-      .localCheckpoint(true)
-    val nEntities = wins.count()
+    val rows = DriverFold.collect(table, "bradleyTerry", entityCol)
+    val entities = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct
+    val at = entities.zipWithIndex.toMap
+    val cells = rows.map(r => (at(r.get(0)), at(r.get(1)), r.getLong(2), r.getLong(3)))
+    val nEntities = entities.length
     require(nEntities >= 2, s"bradleyTerry: need >= 2 entities, got $nEntities")
-    var p = wins.select(sf.col("e"), sf.lit(SCALE).as("p9"))
-    for (it <- 1 to iters) {
-      val d = undirected
-        .join(p.select(sf.col("e").as("ea"), sf.col("p9").as("__pa")), "ea")
-        .join(p.select(sf.col("e").as("eb"), sf.col("p9").as("__pb")), "eb")
-        .select(sf.col("ea"),
-          sf.expr("CAST(CAST(__n AS DECIMAL(38,0)) * 1000000000000000000" +
-            " div (CAST(__pa AS DECIMAL(38,0)) + __pb) AS DECIMAL(38,0))").as("__t"))
-        .groupBy("ea").agg(sf.sum("__t").as("__d18"))
-      val unnorm = wins.join(d, sf.col("e") === sf.col("ea"), "left")
-        .select(sf.col("e"),
-          sf.when(sf.col("__d18").isNull || sf.col("__d18") <= 0, sf.lit(0L))
-            .otherwise(sf.expr("CAST(CAST(wins AS DECIMAL(38,0)) *" +
-              " 1000000000000000000 div __d18 AS BIGINT)")).as("__p0"))
-      // unnorm is read TWICE (its total + the renormalize): checkpoint
-      // the |entities|-row result EVERY round, or the executed plan
-      // doubles per round between cuts (measured 20s at sf0.1 with a
-      // 4-round batch; 2.6s with the per-round cut — the row 157
-      // lineage discipline, amplified by the twice-read shape)
-      val unnormC = unnorm.localCheckpoint(true)
-      val tot = unnormC.agg(sf.sum(dec(sf.col("__p0"))).as("__tot"))
-      p = unnormC.crossJoin(sf.broadcast(tot))
-        .select(sf.col("e"), sf.expr(
-          s"CAST(CAST(__p0 AS DECIMAL(38,0)) * $nEntities * $SCALE div __tot" +
-            " AS BIGINT)").as("p9"))
+    val wins, duelsOf = new Array[Long](nEntities)
+    for ((i, j, n, w) <- cells) {
+      wins(i) += w; wins(j) += n - w; duelsOf(i) += n; duelsOf(j) += n
     }
-    val losses = undirected.groupBy(sf.col("ea").as("e"))
-      .agg(sf.sum("__n").as("__tot_n"))
-    wins.join(losses, "e").join(p, "e")
-      .select(sf.col("e").as(entityCol), sf.col("wins"),
-        (sf.col("__tot_n") - sf.col("wins")).as("losses"),
-        sf.col("p9"),
+    var p = Array.fill(nEntities)(SCALE)
+    for (_ <- 1 to iters) {
+      val d18 = Array.fill(nEntities)(BigInt(0))
+      for ((i, j, n, _) <- cells) {
+        val t = n * E18 / (BigInt(p(i)) + p(j))
+        d18(i) += t; d18(j) += t
+      }
+      val p0 = wins.indices.map(e =>
+        if (d18(e) <= 0) BigInt(0) else wins(e) * E18 / d18(e))
+      val tot = p0.sum
+      p = p0.map(x => (x * nEntities * SCALE / tot).toLong).toArray
+    }
+    DriverFold.frame(contests,
+        entities.indices.map(e => Row(entities(e), wins(e), duelsOf(e) - wins(e), p(e))),
+        table.schema("__i").copy(name = entityCol), StructField("wins", LongType),
+        StructField("losses", LongType), StructField("p9", LongType))
+      .select(sf.col(entityCol), sf.col("wins"), sf.col("losses"), sf.col("p9"),
         gf.roundAt(sf.col("p9").cast("double") / SCALE, 6).as("strength"))
       .orderBy(sf.col("p9").desc, sf.col(entityCol))
   }

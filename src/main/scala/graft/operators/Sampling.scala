@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.sql.{functions => sf}
 import graft.functions.dec
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -438,9 +439,10 @@ object Sampling {
     * rounds allocate > 99% of any realistic budget.
     *
     * Scale shape: ONE corpus pass for per-source capacities (map-side
-    * combine, output = |sources| rows, checkpointed as the loop
-    * invariant); each round is a source-domain agg + broadcast —
-    * nothing corpus-sized moves after the first pass. */
+    * combine, output = |sources| rows), collected once; the rounds fold
+    * on the driver ([[DriverFold]]) — nothing corpus-sized moves after
+    * the first pass. More than 2^20 sources refuse, naming `sourceCol`
+    * to coarsen. */
   def waterfillBudgets(df: DataFrame, sourceCol: String, weight: Column,
                        budget: Long, rounds: Int = 4): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
@@ -448,19 +450,17 @@ object Sampling {
     val caps = df.groupBy(sf.col(sourceCol).as("source"))
       .agg(sf.sum(weight.cast("long")).as("cap"))
       .filter(sf.col("cap").isNotNull && sf.col("cap") > 0)
-      .localCheckpoint(true) // loop invariant: rounds re-read it
-    var alloc = caps.withColumn("alloc", sf.lit(0L))
+    val rows = DriverFold.collect(caps, "waterfillBudgets", sourceCol)
+    val cap = rows.map(_.getLong(1))
+    val alloc = new Array[Long](cap.length)
     for (_ <- 1 to rounds) {
-      val stats = alloc.agg(sf.sum("alloc").as("used"),
-        sf.sum((sf.col("alloc") < sf.col("cap")).cast("long")).as("na"))
-      alloc = alloc.crossJoin(sf.broadcast(stats))
-        .withColumn("__share", sf.greatest(
-          sf.when(sf.col("na") > 0, sf.expr(s"(${budget}L - used) div na"))
-            .otherwise(0L), sf.lit(0L)))
-        .select(sf.col("source"), sf.col("cap"),
-          sf.least(sf.col("cap"), sf.col("alloc") + sf.col("__share")).as("alloc"))
+      val active = cap.indices.count(i => alloc(i) < cap(i))
+      val share = if (active > 0) math.max((budget - alloc.sum) / active, 0L) else 0L
+      for (i <- cap.indices) alloc(i) = math.min(cap(i), alloc(i) + share)
     }
-    alloc.select(sf.col("source"), sf.col("cap").as("capacity"),
+    DriverFold.frame(df, rows.indices.map(i => Row(rows(i).get(0), cap(i), alloc(i))),
+        caps.schema("source"), StructField("cap", LongType), StructField("alloc", LongType))
+      .select(sf.col("source"), sf.col("cap").as("capacity"),
         sf.col("alloc").as("allocation"),
         (sf.col("alloc") === sf.col("cap")).as("saturated"),
         graft.functions.roundAt(sf.col("alloc").cast("double") /

@@ -36,6 +36,36 @@ class InventorySpec extends AnyFunSuite {
       s"SURVEY §2 references queries that don't exist: ${phantom.toSeq.sorted.mkString(", ")}")
   }
 
+  test("every backticked Object.def in SURVEY §2's API column is a def in src/main") {
+    // `pkg.Obj.def`, `Obj.def` (package searched), `functions.def`, with
+    // `/def2`, `{a,B}` or `(param)` forms; a capitalized member is a
+    // nested class. Bare names (`toDF`) and prose are not references.
+    val Ref = raw"((?:[a-z]\w*\.)*)([A-Z]\w*|functions)\.(\{[\w,]+\}|\w+(?:/\w+)*)(.*)".r
+    def loads(name: String) = scala.util.Try(Class.forName(name)).isSuccess
+    def resolve(pkg: String, obj: String, member: String): Boolean = {
+      val pkgs = if (pkg.nonEmpty) Seq(pkg)
+        else Seq("", "operators.", "dq.", "sources.", "streaming.", "plans.")
+      pkgs.exists { p =>
+        val cls = s"graft.$p$obj$$"
+        if (member.head.isUpper) loads(s"graft.$p$obj$$$member")
+        else loads(cls) && Class.forName(cls).getMethods.exists(_.getName == member)
+      }
+    }
+    val apiCells = section2.linesIterator.filter(_.startsWith("|"))
+      .map(_.split(raw"(?<!\\)\|", -1)).filter(_.length > 4).map(_(3))
+    val refs = apiCells.flatMap(raw"`([^`]*)`".r.findAllMatchIn(_).map(_.group(1))).toSeq
+    val checked = refs.collect {
+      case Ref(pkg, obj, members, rest) if rest.isEmpty || rest.startsWith("(") ||
+          rest.startsWith(" ") =>
+        (s"$pkg$obj.$members", members.stripPrefix("{").stripSuffix("}").split("[,/]")
+          .filterNot(m => resolve(pkg, obj, m)).toSeq)
+    }
+    assert(checked.size > 500, s"parsed only ${checked.size} API references")
+    val missing = checked.filter(_._2.nonEmpty)
+    assert(missing.isEmpty, "SURVEY §2 API names with no def in src/main: " +
+      missing.map { case (ref, ms) => s"$ref (${ms.mkString(", ")})" }.mkString("; "))
+  }
+
   test("every oracleSql key has a queries entry and vice-versa gaps are known") {
     val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphanOracles.isEmpty,
