@@ -2,7 +2,7 @@
 """A/B the repo's benchmark: a parent commit against the tree under test.
 
     python3 scripts/ab_bench.py --workload warehouse_etl --seeds 21-30
-        --parent <rev> [--parent-dir DIR] [--seconds 10] [--json OUT]
+        --parent <rev> [--parent-dir DIR] [--seconds 10] [--json OUT] [--aa]
 
 Exports the parent commit (`git archive`, so the repository's .git is
 not touched) into --parent-dir, or reuses that directory when it
@@ -23,6 +23,10 @@ wins (ties count for neither side) and three readings:
   unresolved  the parent's IQR exceeds `bound` times its median, so
               these runs cannot show a regression within the bound,
               unless every change run beats every parent run.
+
+With --aa the "change" side is a second export of the parent (into
+DIR_aa), so the table reads an A/A comparison: any `gain` it prints is
+a false gain of these seeds and this machine.
 
 Run from the repository root.
 """
@@ -80,17 +84,23 @@ def main():
     ap.add_argument("--parent-dir", help="parent checkout (default: a new temp dir)")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--json", help="write every run's result here")
+    ap.add_argument("--aa", action="store_true",
+                    help="run the parent against a second export of itself")
     args = ap.parse_args()
 
     parent = args.parent_dir or tempfile.mkdtemp(prefix="ab_parent_")
     export_parent(args.parent, parent)
-    print(f"[ab] parent {args.parent} in {parent}", file=sys.stderr)
+    change = ROOT
+    if args.aa:
+        change = parent.rstrip("/") + "_aa"
+        export_parent(args.parent, change)
+    print(f"[ab] parent {args.parent} in {parent}, change {change}", file=sys.stderr)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         e2e = json.load(fh)["end_to_end"]
 
     runs = {"parent": [], "change": []}
     for i, seed in enumerate(seeds_of(args.seeds)):
-        order = [("parent", parent), ("change", ROOT)]
+        order = [("parent", parent), ("change", change)]
         for side, tree in (order if i % 2 == 0 else order[::-1]):
             r = run_once(tree, args.workload, seed, args.seconds)
             r["seed"] = seed
@@ -103,6 +113,8 @@ def main():
         with open(args.json, "w") as fh:
             json.dump(runs, fh, indent=1)
 
+    if args.aa:
+        print(f"A/A: both sides are {args.parent}")
     report(runs, e2e, args.workload, args.seeds, args.seconds)
 
 

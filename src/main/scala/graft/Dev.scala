@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * the queries it is a prefix of.
   *
   *   time <sfDir> [name...]            build and action seconds and Spark
-  *                                     jobs per query
+  *                                     jobs per query (and build jobs)
   *   explain <sfDir> [name...]         formatted physical plan
   *   audit <sfDir> <outCsv> [name...]  plan-shape census, one CSV row per query
   *   scan <sfDir> [name...]            unbounded single-partition windows;
@@ -22,7 +22,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * forced confs (-Dspark.graft.*, -Dspark.sql.*), not for pin numbers.
   * Build seconds are the eager work a query does while its frame is
   * built (gates, checkpointed loops); action seconds are the noop write.
-  * Jobs are every Spark job the query starts, build and action.
+  * Jobs are every Spark job the query starts, build and action; the
+  * build figure in parentheses is the part started while the frame
+  * was being built.
   */
 object Dev {
   private type Query = (SparkSession, String) => DataFrame
@@ -56,11 +58,13 @@ object Dev {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      val built = jobs.settled() - j0
       val t2 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
       val n = jobs.settled() - j0
       println(f"[time] $name: build ${(t1 - t0) / 1e9}%.2f s, " +
-        f"action ${(t2 - t1) / 1e9}%.2f s, jobs $n")
+        f"action ${(t3 - t2) / 1e9}%.2f s, jobs $n (build $built)")
       spark.catalog.clearCache()
       System.gc()
     } finally spark.sparkContext.removeSparkListener(jobs)
@@ -71,7 +75,7 @@ object Dev {
     * one-task marker job and waits for its start event: the bus
     * delivers events in order, so every job started before the marker
     * has been counted by then. Marker jobs are not counted. */
-  private final class JobCounter(spark: SparkSession) extends SparkListener {
+  private[graft] final class JobCounter(spark: SparkSession) extends SparkListener {
     private val Marker = "graft.dev.marker"
     private val started = new AtomicInteger
     private val markers = new Semaphore(0)

@@ -856,11 +856,13 @@ object QualityChecks {
       t * (sf.lit(1.421413741) + t * (sf.lit(-1.453152027) +
         t * sf.lit(1.061405429)))))
     val pCol = gf.roundAt(poly * sf.exp(-(x * x)), 9)
-    val byConst = Window.partitionBy(sf.pmod(sf.hash(sf.col("group")), sf.lit(1)))
+    // the one-partition key is a column, so all three windows read one
+    // shuffle: a computed key in each window spec is extracted afresh
+    // per select, and the later window would shuffle its own copy
+    val byConst = Window.partitionBy("__k")
     val ordered = byConst.orderBy(sf.col("p_value").asc_nulls_last, sf.col("group"))
-    // __m and bh_rank in one select share one copy of the computed key,
-    // so one shuffle feeds both windows
     val scored = agg
+      .withColumn("__k", sf.pmod(sf.hash(sf.col("group")), sf.lit(1)))
       .withColumn("z", zCol)
       .withColumn("p_value", sf.when(sf.col("z").isNotNull, pCol))
       .select(sf.col("*"), sf.count(sf.col("p_value")).over(byConst).as("__m"),

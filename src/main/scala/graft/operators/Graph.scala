@@ -546,17 +546,20 @@ object Graph {
     * induction), so a fixed bound is a contract ("within 3 hops"),
     * not an approximation error.
     *
-    * Scale shape: per round ONE equi join of the frontier against the
-    * edge list + one destination-keyed combinable min — |edges|
-    * shuffle rows per round, no windows; at cluster scale the edge
-    * table sits cache-partitioned on src and only distances move. */
+    * Scale shape: every edge brings cost-0 self edges for its two
+    * endpoints, so a round is ONE equi join of the distances against
+    * the edges + one destination-keyed combinable min — one exchange
+    * per round (the min's; the distances arrive partitioned on the
+    * join key), no windows. The edge frame is hash-repartitioned on
+    * src once and every round reads that exchange; nothing is
+    * persisted or checkpointed, building the result runs no job, and
+    * the result is lazy (persist it to read it twice). */
   def bfsHops(df: DataFrame, basketCol: String, itemCol: String,
               seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
               minPairCount: Long = 2, rounds: Int = 3): DataFrame =
     bfsHopsFromEdges(minedEdges(df, basketCol, itemCol, minPairCount),
       seedPred, rounds)
 
-  /** [[bfsHops]] over a pre-mined edge list. */
   /** Co-occurrence edges with an integer traversal cost: weight =
     * 1000000 div pairCount, so frequently co-occurring items are
     * "close" and rare links are expensive — the standard
@@ -580,10 +583,12 @@ object Graph {
     * BFS/k-core/PageRank). Costs are exact integers, so relaxation
     * replays in any engine — no fp path-sum drift.
     *
-    * Scale shape: each round is one |edges| equi join + a
-    * map-side-combined min per destination — the synchronous
-    * Bellman–Ford data-parallel shape; edges persist as the loop
-    * invariant. Rounds bound work at `rounds` × |E|. */
+    * Scale shape: [[bfsHops]]'s — cost-0 self edges, per round one
+    * |edges| equi join + a map-side-combined min per destination (the
+    * synchronous Bellman–Ford data-parallel shape), one exchange per
+    * round, the edge frame shuffled once and read by every round, no
+    * persist or checkpoint, a lazy result. Rounds bound work at
+    * `rounds` × |E| and the plan grows linearly with them. */
   def sssp(df: DataFrame, basketCol: String, itemCol: String,
            seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
            minPairCount: Long = 2, rounds: Int = 3): DataFrame =
@@ -597,40 +602,60 @@ object Graph {
                     rounds: Int = 3): DataFrame =
     relaxRounds(edges0, seedPred, rounds, weighted = true)
 
+  /** [[bfsHops]] over a pre-mined edge list. */
   def bfsHopsFromEdges(edges0: DataFrame,
                        seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                        rounds: Int = 3): DataFrame =
     relaxRounds(edges0, seedPred, rounds, weighted = false)
 
-  /** The shared synchronous relaxation loop behind [[bfsHopsFromEdges]]
-    * (step cost 1) and [[ssspFromEdges]] (step cost `w`). The previous
-    * distances are read twice per round (relax + merge), so each
-    * round's frame is persisted and the [[Loop]] lineage cut bounds
-    * the plan tree at any round budget. Nodes seed from
-    * union(src, dst), so dst-only nodes of an asymmetric pre-mined
-    * edge list still get an output row. */
+  /** The loop-invariant edge frame of a min-relaxation round: every
+    * edge (u, v, w), with `w` = `cost`, becomes itself plus the cost-0
+    * SELF EDGES (u, u, 0) and (v, v, 0), hash-repartitioned on src.
+    * With the self edges one join plus one min per destination is the
+    * whole round — min(prev(v), min over u -> v of prev(u) + w) — so
+    * the round reads the previous state once and nothing needs
+    * persisting; a self edge repeated per endpoint changes no min. The
+    * self edges come from the edge rows themselves, not from a
+    * distinct node frame, so the edge input is computed once, and the
+    * repartition is the one exchange every round reads (a broadcast
+    * round join has no edge exchange of its own and would recompute
+    * the edge input every round). The user's own edges stay as they
+    * are (self-loops, zero weights and duplicates included); a row
+    * with a NULL endpoint drops, as a NULL id names no node. */
+  private def relaxEdges(edges0: DataFrame, cost: Column): DataFrame = {
+    val edges = edges0.select(sf.col("src"), sf.col("dst"), cost.as("w"))
+    val zero = sf.lit(0).cast(edges.schema("w").dataType).as("w")
+    edges.select(sf.explode(sf.array(
+        sf.struct(sf.col("src"), sf.col("dst"), sf.col("w")),
+        sf.struct(sf.col("src"), sf.col("src").as("dst"), zero),
+        sf.struct(sf.col("dst").as("src"), sf.col("dst"), zero))).as("e"))
+      .select("e.*")
+      .filter(sf.col("src").isNotNull && sf.col("dst").isNotNull)
+      .repartition(sf.col("src"))
+  }
+
+  /** The shared synchronous relaxation behind [[bfsHopsFromEdges]]
+    * (step cost 1) and [[ssspFromEdges]] (step cost `w`): every node of
+    * union(src, dst) gets a row — dst-only nodes of an asymmetric
+    * pre-mined list too — and each round is one join of the
+    * [[relaxEdges]] frame against the previous distances plus one
+    * destination-keyed min (min skips the NULLs of unreached nodes).
+    * Round 1 reads no state: the start distance is 0 at a seed and
+    * NULL elsewhere, so a source's `prev + w` is `w` when it is a
+    * seed. The result is ONE LAZY PLAN: building it runs no job, every
+    * round reads the one edge exchange, and nothing is persisted — a
+    * caller that reads the result twice should persist it. */
   private def relaxRounds(edges0: DataFrame,
                           seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                           rounds: Int, weighted: Boolean): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1, 20], got $rounds")
-    val step = if (weighted) sf.col("w") else sf.lit(1L)
-    loop { lp =>
-      lp.prepare(edges0, "src")()
-      val edges = lp.edges("src")
-      val dist0 = nodesOf(withDst = true)(edges)
-        .select(sf.col("item"),
-          sf.when(seedPred(sf.col("item")), 0L).cast("long").as("dist"))
-      lp.iterate(rounds, dist0) { prev =>
-        val relax = edges.join(prev, sf.col("src") === sf.col("item"))
-          .filter(sf.col("dist").isNotNull)
-          .select(sf.col("dst"), (sf.col("dist") + step).as("nd"))
-          .groupBy("dst").agg(sf.min("nd").as("nd"))
-        lp.keep(prev.join(relax, sf.col("item") === sf.col("dst"), "left")
-          .select(sf.col("item"),
-            sf.when(sf.col("dist").isNull, sf.col("nd"))
-              .when(sf.col("nd").isNull, sf.col("dist"))
-              .otherwise(sf.least(sf.col("dist"), sf.col("nd"))).as("dist")))
-      }
+    val edges = relaxEdges(edges0, if (weighted) sf.col("w") else sf.lit(1L))
+    val first = edges.groupBy(sf.col("dst").as("item"))
+      .agg(sf.min(sf.when(seedPred(sf.col("src")), sf.lit(0L) + sf.col("w"))).as("dist"))
+    (2 to rounds).foldLeft(first) { (prev, _) =>
+      edges.join(prev, sf.col("src") === sf.col("item"))
+        .groupBy(sf.col("dst").as("item"))
+        .agg(sf.min(sf.col("dist") + sf.col("w")).as("dist"))
     }.orderBy("item")
   }
 
@@ -1715,7 +1740,7 @@ object Graph {
     *
     * Scale shape: per round ONE edge-keyed join + combinable
     * in-neighbor sum (shuffle = |edges|), loop invariants persisted,
-    * the relaxRounds / UnpersistBatch lineage discipline. */
+    * the [[Loop]]'s UnpersistBatch lineage discipline. */
   def katzCentrality(df: DataFrame, basketCol: String, itemCol: String,
                      minPairCount: Long = 2, iters: Int = 3): DataFrame =
     katzLoop(minedEdges(df, basketCol, itemCol, minPairCount), iters,
@@ -1944,12 +1969,16 @@ object Graph {
     * integer-ratio division rounded 1e-6.
     *
     * Scale shape: the BFS state is (seed, node, dist) — |seeds| ×
-    * reachable nodes; per round ONE edge equi join + map-side-combined
-    * min (shuffle ≤ |seeds|·|E| worst case, in practice frontier-
-    * bounded). The SEED SET is the knob: centrality-for-everyone is an
-    * all-pairs ambition, centrality for a bounded candidate list is
-    * linear in it. Rounds ≤ 8 bound the state's growth; the shared
-    * loop's lineage cut bounds the plan. */
+    * reachable nodes; every edge brings cost-0 self edges for its two
+    * endpoints, so a round is ONE edge equi join + a map-side-combined
+    * (seed, node) min (shuffle ≤ |seeds|·|E| worst case, in practice
+    * frontier-bounded). The edge frame is hash-repartitioned on src
+    * once and every round reads that exchange; nothing is persisted or
+    * checkpointed, building the result runs no job, and the result is
+    * lazy (persist it to read it twice). The SEED SET is the knob:
+    * centrality-for-everyone is an all-pairs ambition, centrality for
+    * a bounded candidate list is linear in it. Rounds ≤ 8 bound the
+    * state's growth and the plan. */
   def closenessCentrality(df: DataFrame, basketCol: String, itemCol: String,
                           seedPred: Column => Column,
                           minPairCount: Long = 2, rounds: Int = 3): DataFrame =
@@ -1957,26 +1986,28 @@ object Graph {
       seedPred, rounds)
 
   /** The per-seed tagged BFS behind [[closenessFromEdges]] and
-    * [[eccentricityFromEdges]]: runs `rounds` synchronous min-merge
-    * steps and hands the final (seed, item, dist) state to `finish`,
-    * materializing its result before the loop frames are released. */
+    * [[eccentricityFromEdges]]: a (seed, item, dist) state, and each
+    * of `rounds` synchronous steps is one join of the [[relaxEdges]]
+    * frame (step cost 1) against the state plus one (seed, item)-keyed
+    * min — the self edges carry every reached node forward. Round 1
+    * reads no state: it groups the edge frame by (src, dst) with `w`
+    * kept at a seed source only, then drops the NULL rows. The seed
+    * test sits inside the min rather than in a filter on the edges,
+    * which would be pushed below the edge exchange and give round 1 a
+    * second copy of the edge input. `finish` gets the final state as
+    * ONE LAZY PLAN: building it runs no job and persists nothing. */
   private def taggedBfs(edges0: DataFrame, seedPred: Column => Column,
                         rounds: Int)(finish: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1, 8], got $rounds")
-    loop { lp =>
-      lp.prepare(edges0, "src")()
-      val edges = lp.edges("src")
-      val state0 = lp.keep(nodesOf(withDst = true)(edges)
-        .filter(seedPred(sf.col("item")))
-        .select(sf.col("item").as("seed"), sf.col("item"), sf.lit(0L).as("dist")))
-      finish(lp.iterate(rounds, state0) { prev =>
-        val relax = edges.join(prev, sf.col("src") === sf.col("item"))
-          .select(sf.col("seed"), sf.col("dst").as("item"),
-            (sf.col("dist") + sf.lit(1L)).as("dist"))
-        lp.keep(prev.unionByName(relax)
-          .groupBy("seed", "item").agg(sf.min("dist").as("dist")))
-      })
-    }
+    val edges = relaxEdges(edges0, sf.lit(1L))
+    val first = edges.groupBy(sf.col("src").as("seed"), sf.col("dst").as("item"))
+      .agg(sf.min(sf.when(seedPred(sf.col("src")), sf.col("w"))).as("dist"))
+      .filter(sf.col("dist").isNotNull)
+    finish((2 to rounds).foldLeft(first) { (prev, _) =>
+      edges.join(prev, sf.col("src") === sf.col("item"))
+        .groupBy(sf.col("seed"), sf.col("dst").as("item"))
+        .agg(sf.min(sf.col("dist") + sf.col("w")).as("dist"))
+    })
   }
 
   /** [[closenessCentrality]] over a pre-mined directed edge list — the
@@ -2010,7 +2041,9 @@ object Graph {
     *
     * Determinism: exact integer hop distances (the row 425 tagged
     * BFS), max/count exact. Scale shape: identical to row 425 —
-    * (seed, node, dist) state, seeds are the knob. */
+    * (seed, node, dist) state, seeds are the knob, cost-0 self edges,
+    * one edge exchange read by every round, a lazy result with no
+    * persist. */
   def eccentricity(df: DataFrame, basketCol: String, itemCol: String,
                    seedPred: Column => Column,
                    minPairCount: Long = 2, rounds: Int = 3): DataFrame =

@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Graph
@@ -19,8 +22,13 @@ import graft.operators.Graph
   * cache, and these tests force it LOW to pin both halves of the
   * contract: (i) results are row-identical with the gate forced into
   * the big branch, (ii) the per-round sort-merge join consumes the
-  * cached edge partitioning+ordering with no fresh Exchange or Sort. */
-class CoPartitionLoopSpec extends SparkFunSuite {
+  * cached edge partitioning+ordering with no fresh Exchange or Sort.
+  * The gate serves the loops that still persist their edges: rankLoop
+  * (the PageRank family), label propagation, kCore, the power loops
+  * (eigenvector, Katz) and HITS. bfsHops, sssp, closeness and
+  * eccentricity build one lazy plan instead; the last test pins that
+  * (no job while building, one edge exchange reused by every round). */
+class CoPartitionLoopSpec extends SparkFunSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // irregular graph: degree spread, a pendant node (PprSymmetricSpec's)
@@ -126,5 +134,42 @@ class CoPartitionLoopSpec extends SparkFunSuite {
       }
       assert(labels.count() > 0)
     }
+  }
+
+  /** True when `p` hash-partitions on the one column `src`: the edge
+    * side of a round join. */
+  private def keyedOnSrc(p: SparkPlan): Boolean = p.outputPartitioning match {
+    case HashPartitioning(Seq(a: AttributeReference), _) => a.name == "src"
+    case _ => false
+  }
+
+  test("min-relaxation loops build no job and shuffle the edge frame once") {
+    val seed = (c: Column) => c.isin(10L, 13L)
+    def edges = Graph.minedEdges(baskets, "basket", "item", 1)
+    // (name, rounds, build): the four operators at both ends of their
+    // round budgets, mined and over pre-mined edges
+    val cases: Seq[(String, Int, () => DataFrame)] = Seq(
+      ("sssp", 3, () => Graph.sssp(baskets, "basket", "item", seed, 1, 3)),
+      ("sssp", 12, () => Graph.sssp(baskets, "basket", "item", seed, 1, 12)),
+      ("closenessCentrality", 3,
+        () => Graph.closenessCentrality(baskets, "basket", "item", seed, 1, 3)),
+      ("closenessCentrality", 8,
+        () => Graph.closenessCentrality(baskets, "basket", "item", seed, 1, 8)),
+      ("bfsHopsFromEdges", 5, () => Graph.bfsHopsFromEdges(edges, seed, 5)),
+      ("eccentricityFromEdges", 4, () => Graph.eccentricityFromEdges(edges, seed, 4)))
+    val jobs = new Dev.JobCounter(spark)
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
+      for ((name, rounds, build) <- cases) {
+        val j0 = jobs.settled()
+        val df = build()
+        assert(jobs.settled() == j0, s"$name r$rounds started Spark jobs while being built")
+        assert(df.collect().nonEmpty, s"$name r$rounds")
+        val plan = df.queryExecution.executedPlan
+        val fresh = collect(plan) { case e: ShuffleExchangeExec if keyedOnSrc(e) => e }
+        val reused = collect(plan) { case e: ReusedExchangeExec if keyedOnSrc(e.child) => e }
+        assert(fresh.size == 1 && reused.size == rounds - 1,
+          s"$name r$rounds: ${fresh.size} edge exchanges, ${reused.size} reuses:\n$plan")
+      }
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 }
